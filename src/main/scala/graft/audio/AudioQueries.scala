@@ -28,10 +28,11 @@ final case class ClipMeasure(
   * trivially decodable in-sandbox) — nothing is stubbed.
   *
   * All au_* queries derive from ONE fused pass ([[measured]]): synthesize
-  * into a task-reused buffer, then stream the bytes once for SNR / sample
-  * count / frame features. The bytes never round-trip the Tungsten encoder
-  * and per-row garbage is ~zero — at 10^12 rows the synth+decode stage is
-  * the dominant cost and allocation stalls are what break N->4N scaling.
+  * into a task-reused buffer and measure SNR / sample count / frame
+  * features in the same sweep ([[synthRows]]). The bytes never round-trip
+  * the Tungsten encoder and per-row garbage is ~zero — at 10^12 rows the
+  * synth+decode stage is the dominant cost and allocation stalls are what
+  * break N->4N scaling.
   *
   * Injections (see ClipsTable): ord % 149 == 0 -> corrupted audio (10 dB
   * SNR, must fail the ≥30 dB allclose invariant); ord % 157 == 0 -> byte
@@ -61,11 +62,36 @@ object AudioQueries {
     import spark.implicits._
     meta
       .repartition(spark.sparkContext.defaultParallelism * 2)
-      .as[ClipMeta].map { m =>
-      val snr = if (m.ord % 149 == 0) Wav.CorruptSnrDb else Wav.CleanSnrDb
+      .as[ClipMeta]
+      .mapPartitions(synthRows(_) { (m, r, buf) =>
+        ClipFull(m.clip_id, java.util.Arrays.copyOf(buf, r.len), m.sr_hz, m.dur_ms,
+          m.codec, m.transcript, m.ord, m.bucket)
+      })
+  }
+
+  /** The SNR a clip is synthesized at: the planted corrupt rows
+    * (`ord % 149 == 0`) carry [[Wav.CorruptSnrDb]], the rest
+    * [[Wav.CleanSnrDb]]. */
+  def snrDbOf(ord: Long): Double =
+    if (ord % 149 == 0) Wav.CorruptSnrDb else Wav.CleanSnrDb
+
+  /** The per-row audio rule, written once for every pass over clips: each
+    * clip is synthesized with its planted injections ([[snrDbOf]]; the
+    * `ord % 157 == 0` rows run 7 ms past their declared dur_ms) into one
+    * buffer reused across the partition, measured by the single
+    * [[Wav.synthValidateInto]] kernel (frame features when `frameMs > 0`),
+    * and handed to `f` with the buffer, whose first `len` bytes hold the
+    * clip until the next row. */
+  def synthRows[A](rows: Iterator[ClipMeta], frameMs: Int = 0)(
+      f: (ClipMeta, Wav.Measure, Array[Byte]) => A): Iterator[A] = {
+    var buf = new Array[Byte](64 * 1024)
+    rows.map { m =>
       val extra = if (m.ord % 157 == 0) 7 else 0
-      val bytes = Wav.synth(seedOf(m.clip_id), m.ord, m.sr_hz, m.dur_ms, snr, extra)
-      ClipFull(m.clip_id, bytes, m.sr_hz, m.dur_ms, m.codec, m.transcript, m.ord, m.bucket)
+      val need = Wav.synthLen(m.sr_hz, m.dur_ms, extra)
+      if (need > buf.length) buf = new Array[Byte](need)
+      val r = Wav.synthValidateInto(buf, seedOf(m.clip_id), m.ord, m.sr_hz,
+        m.dur_ms, snrDbOf(m.ord), extra, frameMs)
+      f(m, r, buf)
     }
   }
 
@@ -77,25 +103,10 @@ object AudioQueries {
     ClipsTable.base(spark, sfDir)
       .repartition(spark.sparkContext.defaultParallelism * 2)
       .as[ClipMeta]
-      .mapPartitions { it =>
-        var buf = new Array[Byte](64 * 1024)
-        it.map { m =>
-          val seed = seedOf(m.clip_id)
-          val snrDb = if (m.ord % 149 == 0) Wav.CorruptSnrDb else Wav.CleanSnrDb
-          val extra = if (m.ord % 157 == 0) 7 else 0
-          val need = Wav.synthLen(m.sr_hz, m.dur_ms, extra)
-          if (need > buf.length) buf = new Array[Byte](need)
-          // fully fused synth+validate+frame-features (round-7): one pass,
-          // one sine per sample, no third sweep over the bytes —
-          // bit-identical to synthInto + validateVsClean + frameStats
-          // (PureSpec parity)
-          val (_, snr, n, nFrames, rmsMean, rmsMax, meanSq) =
-            Wav.synthMeasureInto(buf, seed, m.ord, m.sr_hz, m.dur_ms, snrDb,
-              extra, FrameMs)
-          ClipMeasure(m.clip_id, m.sr_hz, m.dur_ms, m.ord, snr, n,
-            nFrames, rmsMean, rmsMax, meanSq)
-        }
-      }
+      .mapPartitions(synthRows(_, FrameMs) { (m, r, _) =>
+        ClipMeasure(m.clip_id, m.sr_hz, m.dur_ms, m.ord, r.snrDb, r.nSamples,
+          r.nFrames, r.rmsMean, r.rmsMax, r.meanSq)
+      })
   }
 
   /** Shared materialization of [[measured]] (round-4): the four au_*
@@ -177,8 +188,7 @@ object AudioQueries {
     import spark.implicits._
     measuredShared(spark, sfDir)
       .map { c =>
-        val snrDb = if (c.ord % 149 == 0) Wav.CorruptSnrDb else Wav.CleanSnrDb
-        val expected = Wav.expectedMeanSq(snrDb)
+        val expected = Wav.expectedMeanSq(snrDbOf(c.ord))
         (c.clip_id, c.n_frames, math.abs(c.mean_sq - expected) < PowerTolerance)
       }
       .toDF("clip_id", "n_frames", "power_ok")

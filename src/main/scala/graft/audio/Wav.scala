@@ -8,11 +8,20 @@ package graft.audio
   * allclose at SNR≥30 dB vs the reference output" — here the reference
   * output is the clean resynthesised sine recoverable from (clip_id, sr_hz,
   * byte length) alone, so the validator needs no side channel.
+  *
+  * One kernel: [[synthValidateInto]] is the only loop that synthesizes or
+  * validates samples. It writes a clip into a caller-owned buffer and, in
+  * the same pass, measures the stored samples against the clean sine it just
+  * computed (one sine per sample) and, when asked, the frame features.
+  * [[synth]] is that kernel over a fresh buffer. Its outputs are
+  * bit-identical to synthesizing, decoding and measuring separately
+  * (PureSpec pins bytes, SNR, sample count and frame features against a
+  * test-side reference).
   */
 object Wav {
 
   val HeaderBytes = 44
-  private val Amplitude = 0.6
+  private[audio] val Amplitude = 0.6
   /** Clean clips carry noise at 40 dB SNR; corrupted ones at 10 dB. */
   val CleanSnrDb = 40.0
   val CorruptSnrDb = 10.0
@@ -20,7 +29,7 @@ object Wav {
   /** Sine frequency recoverable from the numeric clip seed. */
   def freqOf(seed: Long): Double = 200.0 + (seed % 600)
 
-  private def noiseAmp(snrDb: Double): Double = {
+  private[audio] def noiseAmp(snrDb: Double): Double = {
     // uniform noise in [-a,a): power a^2/3; sine power A^2/2
     val signalPower = Amplitude * Amplitude / 2.0
     StrictMath.sqrt(3.0 * signalPower / StrictMath.pow(10.0, snrDb / 10.0))
@@ -35,30 +44,12 @@ object Wav {
     sig + a * a / 3.0
   }
 
-  /** Env-gated fast sine kernel (round-5, closing the round-3 loop):
-    * `GRAFT_FAST_SYNTH=1` replaces the per-sample `StrictMath.sin` in the
-    * synth + validation inner loops with a Chebyshev two-term recurrence
-    * (sin((i+1)w) = 2cos(w)·sin(iw) − sin((i−1)w)) — measured ~3× cheaper
-    * per row in round 3 (40k → 117k clips/s at local[24]). OFF by default
-    * IN THIS SANDBOX ONLY: the virtualized host scales dense high-IPC FP
-    * 6→24 threads at only ~0.6 (graft.tools.SynthScale probe — active-core
-    * turbo penalizes throughput-bound FP far more than the latency-bound
-    * native sin call), so the faster kernel cannot hold the raw ≥ 0.8
-    * N→4N criterion HERE even though it is a straight win on real
-    * multi-node executors, where FP throughput scales with machines.
-    * The recurrence is IEEE-deterministic across JVMs (pure mul/sub), its
-    * accumulated error over the longest clip is ~1e-9 — far below the
-    * PCM16 quantization floor — and synthesis and validation share one
-    * kernel under either flag, so the SNR≥30dB invariant and the planted
-    * corrupt rows behave identically (asserted cross-kernel in PureSpec). */
-  val FastSynth: Boolean = sys.env.get("GRAFT_FAST_SYNTH").contains("1")
-
   /** Next LCG state (Knuth MMIX constants). */
-  @inline private def lcg(x: Long): Long =
+  @inline private[audio] def lcg(x: Long): Long =
     x * 6364136223846793005L + 1442695040888963407L
 
   /** uniform in [-1, 1) from the high 53 bits. */
-  @inline private def unit(x: Long): Double =
+  @inline private[audio] def unit(x: Long): Double =
     ((x >>> 11).toDouble / (1L << 53).toDouble) * 2.0 - 1.0
 
   /** Synthesize one clip. `seed` drives the sine frequency (must equal the
@@ -66,9 +57,8 @@ object Wav {
     * the real byte length vs the declared dur_ms (consistency fixture). */
   def synth(seed: Long, noiseSeed: Long, srHz: Int, durMs: Int,
       snrDb: Double = CleanSnrDb, extraMs: Int = 0): Array[Byte] = {
-    val n = (srHz.toLong * (durMs + extraMs) / 1000L).toInt
-    val out = new Array[Byte](HeaderBytes + 2 * n)
-    synthInto(out, seed, noiseSeed, srHz, durMs, snrDb, extraMs)
+    val out = new Array[Byte](synthLen(srHz, durMs, extraMs))
+    synthValidateInto(out, seed, noiseSeed, srHz, durMs, snrDb, extraMs)
     out
   }
 
@@ -76,70 +66,25 @@ object Wav {
   def synthLen(srHz: Int, durMs: Int, extraMs: Int = 0): Int =
     HeaderBytes + 2 * (srHz.toLong * (durMs + extraMs) / 1000L).toInt
 
-  /** [[synth]] into a caller-owned buffer (`out.length >= synthLen(...)`);
-    * returns the written byte count. Lets the hot validation path reuse one
-    * buffer per task instead of allocating ~30 KB per row — the GC-pressure
-    * fix the N->4N scaling criterion needs (allocation stalls hit the
-    * 32-thread level hardest). Byte-identical to [[synth]]. */
-  def synthInto(out: Array[Byte], seed: Long, noiseSeed: Long, srHz: Int, durMs: Int,
-      snrDb: Double = CleanSnrDb, extraMs: Int = 0, fast: Boolean = FastSynth): Int = {
-    val n = (srHz.toLong * (durMs + extraMs) / 1000L).toInt
-    val f = freqOf(seed)
-    val a = noiseAmp(snrDb)
-    writeHeader(out, srHz, n)
-    var state = lcg(noiseSeed ^ 0x5DEECE66DL)
-    var i = 0
-    if (fast) {
-      val w = 2.0 * StrictMath.PI * f / srHz
-      val c = 2.0 * StrictMath.cos(w)
-      var sPrev = -StrictMath.sin(w) // sin(-w)
-      var sCur = 0.0 // sin(0)
-      while (i < n) {
-        val clean = Amplitude * sCur
-        state = lcg(state)
-        val sample = clean + a * unit(state)
-        val s = math.max(-1.0, math.min(1.0, sample))
-        val pcm = StrictMath.round(s * 32767.0).toInt.toShort
-        out(HeaderBytes + 2 * i) = (pcm & 0xFF).toByte
-        out(HeaderBytes + 2 * i + 1) = ((pcm >> 8) & 0xFF).toByte
-        val sNext = c * sCur - sPrev
-        sPrev = sCur; sCur = sNext
-        i += 1
-      }
-    } else while (i < n) {
-      val clean = Amplitude * StrictMath.sin(2.0 * StrictMath.PI * f * i / srHz)
-      state = lcg(state)
-      val sample = clean + a * unit(state)
-      val s = math.max(-1.0, math.min(1.0, sample))
-      val pcm = StrictMath.round(s * 32767.0).toInt.toShort
-      out(HeaderBytes + 2 * i) = (pcm & 0xFF).toByte
-      out(HeaderBytes + 2 * i + 1) = ((pcm >> 8) & 0xFF).toByte
-      i += 1
-    }
-    HeaderBytes + 2 * n
-  }
+  /** What one kernel pass measures. `snrDb` is the SNR of the stored
+    * samples vs the clean sine (NaN for a clip with no samples). The frame
+    * features cover the first `nFrames` whole frames only (a truncated tail
+    * counts toward the SNR, not the features) and are all 0 when no frame
+    * length was asked for or no whole frame fits: `rmsMean`/`rmsMax` are
+    * over the per-frame RMS values of [[frameRms]], `meanSq` is the mean
+    * squared sample amplitude over the covered frames — the quantity with
+    * the closed-form expectation [[expectedMeanSq]]. */
+  final case class Measure(len: Int, snrDb: Double, nSamples: Long,
+      nFrames: Long, rmsMean: Double, rmsMax: Double, meanSq: Double)
 
-  /** Fused [[synthInto]] + [[validateVsClean]] in ONE pass over the sample
-    * stream: synthesize each PCM sample into the caller-owned buffer and
-    * immediately validate the STORED bytes against the clean sine — whose
-    * value the synth step just computed, so the validation no longer
-    * re-derives it with a second `StrictMath.sin` per sample. Returns
-    * (writtenLen, snrDb, nSamples).
-    *
-    * Bit-identical to the two-call sequence (asserted in PureSpec): the
-    * clean value is the same FP expression both calls evaluate at the same
-    * `i`, the validated sample is read back from the bytes just written
-    * (the encode side of the byte roundtrip stays on the hot path), and
-    * the sigPow/noisePow accumulation order matches validateVsClean's.
-    * Motivation (round-7, guide §1.2 "per-task work"): the synth+validate
-    * map is the dominant stage of the headline pipeline and of the au_*
-    * shared pass, and the per-sample sine is its dominant term — the
-    * two-call shape evaluated it TWICE per sample (once to synthesize,
-    * once to resynthesize the reference inside validate). One fused pass
-    * halves that without touching what either step computes. */
+  /** The kernel: synthesize [[synth]]'s clip into `out`
+    * (`out.length >= synthLen(...)`, so a task can reuse one buffer instead
+    * of allocating ~30 KB per row) and measure it in the same pass. With
+    * `frameMs > 0` it also accumulates the `frameMs` frame features;
+    * the default 0 skips them. */
   def synthValidateInto(out: Array[Byte], seed: Long, noiseSeed: Long,
       srHz: Int, durMs: Int, snrDb: Double = CleanSnrDb, extraMs: Int = 0,
-      fast: Boolean = FastSynth): (Int, Double, Long) = {
+      frameMs: Int = 0): Measure = {
     val n = (srHz.toLong * (durMs + extraMs) / 1000L).toInt
     val f = freqOf(seed)
     val a = noiseAmp(snrDb)
@@ -147,135 +92,56 @@ object Wav {
     var state = lcg(noiseSeed ^ 0x5DEECE66DL)
     var sigPow = 0.0
     var noisePow = 0.0
-    var i = 0
-    if (fast) {
-      val w = 2.0 * StrictMath.PI * f / srHz
-      val c = 2.0 * StrictMath.cos(w)
-      var sPrev = -StrictMath.sin(w)
-      var sCur = 0.0
-      while (i < n) {
-        val clean = Amplitude * sCur
-        state = lcg(state)
-        val sample = clean + a * unit(state)
-        val s = math.max(-1.0, math.min(1.0, sample))
-        val pcm = StrictMath.round(s * 32767.0).toInt.toShort
-        out(HeaderBytes + 2 * i) = (pcm & 0xFF).toByte
-        out(HeaderBytes + 2 * i + 1) = ((pcm >> 8) & 0xFF).toByte
-        // validate the STORED bytes (same read expression as validateVsClean)
-        val got = (((out(HeaderBytes + 2 * i) & 0xFF)) |
-          (out(HeaderBytes + 2 * i + 1) << 8)).toShort
-        val resid = got / 32767.0 - clean
-        sigPow += clean * clean
-        noisePow += resid * resid
-        val sNext = c * sCur - sPrev
-        sPrev = sCur; sCur = sNext
-        i += 1
-      }
-    } else while (i < n) {
-      val clean = Amplitude * StrictMath.sin(2.0 * StrictMath.PI * f * i / srHz)
-      state = lcg(state)
-      val sample = clean + a * unit(state)
-      val s = math.max(-1.0, math.min(1.0, sample))
-      val pcm = StrictMath.round(s * 32767.0).toInt.toShort
-      out(HeaderBytes + 2 * i) = (pcm & 0xFF).toByte
-      out(HeaderBytes + 2 * i + 1) = ((pcm >> 8) & 0xFF).toByte
-      val got = (((out(HeaderBytes + 2 * i) & 0xFF)) |
-        (out(HeaderBytes + 2 * i + 1) << 8)).toShort
-      val resid = got / 32767.0 - clean
-      sigPow += clean * clean
-      noisePow += resid * resid
-      i += 1
-    }
-    val snr =
-      if (n == 0) Double.NaN // validateVsClean: zero decodable samples
-      else if (noisePow == 0.0) Double.PositiveInfinity
-      else 10.0 * StrictMath.log10(sigPow / noisePow)
-    (HeaderBytes + 2 * n, snr, n.toLong)
-  }
-
-  /** [[synthValidateInto]] + [[frameStats]] fused into the same single
-    * pass: the 20 ms-frame RMS/power accumulation reads the just-written
-    * sample instead of a third sweep over the byte buffer. Returns
-    * (writtenLen, snrDb, nSamples, nFrames, rmsMean, rmsMax, meanSq) —
-    * each component bit-identical to the corresponding unfused call
-    * (PureSpec parity): the frame accumulator sees the same
-    * `sample/32767.0` doubles in the same order, frames truncate the tail
-    * exactly like frameStats (only the first nFrames*frameLen samples
-    * accumulate), and the snr/byte outputs are [[synthValidateInto]]'s.
-    * Only the au_* shared pass needs the frame features, so this stays a
-    * separate entry point and the headline pipeline keeps the two-output
-    * kernel. */
-  def synthMeasureInto(out: Array[Byte], seed: Long, noiseSeed: Long,
-      srHz: Int, durMs: Int, snrDb: Double = CleanSnrDb, extraMs: Int = 0,
-      frameMs: Int = 20, fast: Boolean = FastSynth)
-      : (Int, Double, Long, Long, Double, Double, Double) = {
-    val n = (srHz.toLong * (durMs + extraMs) / 1000L).toInt
-    val f = freqOf(seed)
-    val a = noiseAmp(snrDb)
-    writeHeader(out, srHz, n)
-    var state = lcg(noiseSeed ^ 0x5DEECE66DL)
-    var sigPow = 0.0
-    var noisePow = 0.0
-    // frame accumulators (frameStats layout): frames truncate — samples at
-    // or past nFrames*frameLen contribute to snr but not to the features
     val frameLen = math.max(1, srHz * frameMs / 1000)
-    val nFrames = n / frameLen
+    val nFrames = if (frameMs > 0) n / frameLen else 0
     val covered = nFrames * frameLen
     var rmsSum = 0.0
     var rmsMax = 0.0
     var sqSum = 0.0
-    var frameAcc = 0.0
-    var inFrame = 0
+    // the same FP ops as 2.0 * PI * f * i / srHz, hoisted. Loop shape is
+    // deliberate: with a per-sample frame branch, or without this hoist,
+    // HotSpot C2 (JDK 17) compiled the loop to ~0.67 ms per clip against
+    // ~0.44 ms for this shape (single thread, 4-vCPU Xeon VM)
+    val twoPiF = 2.0 * StrictMath.PI * f
+    val sr = srHz.toDouble
     var i = 0
-    val w = 2.0 * StrictMath.PI * f / srHz
-    val c = if (fast) 2.0 * StrictMath.cos(w) else 0.0
-    var sPrev = if (fast) -StrictMath.sin(w) else 0.0
-    var sCur = 0.0
+    // one run per whole frame, then the uncovered tail (every sample when
+    // there are no frames) as a last run that adds to the SNR only
     while (i < n) {
-      val clean =
-        if (fast) Amplitude * sCur
-        else Amplitude * StrictMath.sin(2.0 * StrictMath.PI * f * i / srHz)
-      state = lcg(state)
-      val sample = clean + a * unit(state)
-      val s = math.max(-1.0, math.min(1.0, sample))
-      val pcm = StrictMath.round(s * 32767.0).toInt.toShort
-      out(HeaderBytes + 2 * i) = (pcm & 0xFF).toByte
-      out(HeaderBytes + 2 * i + 1) = ((pcm >> 8) & 0xFF).toByte
-      val got = (((out(HeaderBytes + 2 * i) & 0xFF)) |
-        (out(HeaderBytes + 2 * i + 1) << 8)).toShort
-      val resid = got / 32767.0 - clean
-      sigPow += clean * clean
-      noisePow += resid * resid
-      if (i < covered) {
-        val v = got / 32767.0
-        frameAcc += v * v
-        inFrame += 1
-        if (inFrame == frameLen) {
-          val rms = StrictMath.sqrt(frameAcc / frameLen)
-          rmsSum += rms
-          if (rms > rmsMax) rmsMax = rms
-          sqSum += frameAcc
-          frameAcc = 0.0
-          inFrame = 0
-        }
+      val end = if (i < covered) i + frameLen else n
+      var frameSq = 0.0
+      while (i < end) {
+        val clean = Amplitude * StrictMath.sin(twoPiF * i / sr)
+        state = lcg(state)
+        val s = math.max(-1.0, math.min(1.0, clean + a * unit(state)))
+        val pcm = StrictMath.round(s * 32767.0).toInt.toShort
+        out(HeaderBytes + 2 * i) = (pcm & 0xFF).toByte
+        out(HeaderBytes + 2 * i + 1) = ((pcm >> 8) & 0xFF).toByte
+        // the stored sample, as decode reads it back
+        val v = pcm / 32767.0
+        val resid = v - clean
+        sigPow += clean * clean
+        noisePow += resid * resid
+        frameSq += v * v
+        i += 1
       }
-      if (fast) {
-        val sNext = c * sCur - sPrev
-        sPrev = sCur; sCur = sNext
+      if (end <= covered) {
+        val rms = StrictMath.sqrt(frameSq / frameLen)
+        rmsSum += rms
+        if (rms > rmsMax) rmsMax = rms
+        sqSum += frameSq
       }
-      i += 1
     }
     val snr =
       if (n == 0) Double.NaN
       else if (noisePow == 0.0) Double.PositiveInfinity
       else 10.0 * StrictMath.log10(sigPow / noisePow)
-    val (rmsMean, meanSq) =
-      if (nFrames == 0) (0.0, 0.0)
-      else (rmsSum / nFrames, sqSum / (nFrames.toLong * frameLen))
-    (HeaderBytes + 2 * n, snr, n.toLong, nFrames.toLong, rmsMean, rmsMax, meanSq)
+    if (nFrames == 0) Measure(HeaderBytes + 2 * n, snr, n.toLong, 0L, 0.0, 0.0, 0.0)
+    else Measure(HeaderBytes + 2 * n, snr, n.toLong, nFrames.toLong,
+      rmsSum / nFrames, rmsMax, sqSum / (nFrames.toLong * frameLen))
   }
 
-  private def writeHeader(b: Array[Byte], srHz: Int, nSamples: Int): Unit = {
+  private[audio] def writeHeader(b: Array[Byte], srHz: Int, nSamples: Int): Unit = {
     val dataLen = 2 * nSamples
     def le32(off: Int, v: Int): Unit = {
       b(off) = (v & 0xFF).toByte; b(off + 1) = ((v >> 8) & 0xFF).toByte
@@ -312,142 +178,6 @@ object Wav {
       i += 1
     }
     Some((sr, samples))
-  }
-
-  /** SNR (dB) of decoded PCM vs the clean resynthesised sine — the per-row
-    * allclose invariant. NaN if undecodable or empty. */
-  def snrVsClean(bytes: Array[Byte], seed: Long,
-      fast: Boolean = FastSynth): Double = decode(bytes) match {
-    case None => Double.NaN
-    case Some((sr, samples)) if samples.length == 0 => Double.NaN
-    case Some((sr, samples)) =>
-      val f = freqOf(seed)
-      var sigPow = 0.0
-      var noisePow = 0.0
-      var i = 0
-      if (fast) {
-        val w = 2.0 * StrictMath.PI * f / sr
-        val c = 2.0 * StrictMath.cos(w)
-        var sPrev = -StrictMath.sin(w)
-        var sCur = 0.0
-        while (i < samples.length) {
-          val clean = Amplitude * sCur
-          val resid = samples(i) / 32767.0 - clean
-          sigPow += clean * clean
-          noisePow += resid * resid
-          val sNext = c * sCur - sPrev
-          sPrev = sCur; sCur = sNext
-          i += 1
-        }
-      } else while (i < samples.length) {
-        val clean = Amplitude * StrictMath.sin(2.0 * StrictMath.PI * f * i / sr)
-        val got = samples(i) / 32767.0
-        val resid = got - clean
-        sigPow += clean * clean
-        noisePow += resid * resid
-        i += 1
-      }
-      if (noisePow == 0.0) Double.PositiveInfinity
-      else 10.0 * StrictMath.log10(sigPow / noisePow)
-  }
-
-  /** One-pass per-row validation over a caller-owned buffer holding `len`
-    * valid bytes: decodes the header and streams PCM samples directly from
-    * the bytes (no Array[Short] materialization), returning
-    * (snrDb vs the clean resynth, decoded sample count). Semantically
-    * identical to `decode` + `snrVsClean` + length (asserted in AudioSpec);
-    * exists so the headline validation pipeline allocates nothing per row.
-    * Returns (NaN, -1) on a malformed header. */
-  def validateVsClean(bytes: Array[Byte], len: Int, seed: Long,
-      fast: Boolean = FastSynth): (Double, Long) = {
-    if (bytes == null || len < HeaderBytes) return (Double.NaN, -1L)
-    def le32(off: Int): Int =
-      (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    if (!(bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F'))
-      return (Double.NaN, -1L)
-    val sr = le32(24)
-    val dataLen = math.min(le32(40), len - HeaderBytes)
-    if (sr <= 0 || dataLen < 0) return (Double.NaN, -1L)
-    val n = dataLen / 2
-    if (n == 0) return (Double.NaN, 0L)
-    val f = freqOf(seed)
-    var sigPow = 0.0
-    var noisePow = 0.0
-    var i = 0
-    if (fast) {
-      val w = 2.0 * StrictMath.PI * f / sr
-      val c = 2.0 * StrictMath.cos(w)
-      var sPrev = -StrictMath.sin(w)
-      var sCur = 0.0
-      while (i < n) {
-        val s = (((bytes(HeaderBytes + 2 * i) & 0xFF)) |
-          (bytes(HeaderBytes + 2 * i + 1) << 8)).toShort
-        val clean = Amplitude * sCur
-        val resid = s / 32767.0 - clean
-        sigPow += clean * clean
-        noisePow += resid * resid
-        val sNext = c * sCur - sPrev
-        sPrev = sCur; sCur = sNext
-        i += 1
-      }
-    } else while (i < n) {
-      val s = (((bytes(HeaderBytes + 2 * i) & 0xFF)) |
-        (bytes(HeaderBytes + 2 * i + 1) << 8)).toShort
-      // same FP expression order as snrVsClean -> bit-identical SNR
-      val clean = Amplitude * StrictMath.sin(2.0 * StrictMath.PI * f * i / sr)
-      val resid = s / 32767.0 - clean
-      sigPow += clean * clean
-      noisePow += resid * resid
-      i += 1
-    }
-    val snr =
-      if (noisePow == 0.0) Double.PositiveInfinity
-      else 10.0 * StrictMath.log10(sigPow / noisePow)
-    (snr, n.toLong)
-  }
-
-  /** One-pass frame feature summary over a caller-owned buffer:
-    * (nFrames, rmsMean, rmsMax, meanSq) where rms* reproduce
-    * `frameRms(bytes, frameMs)` exactly (same accumulation order) and
-    * meanSq is the mean squared sample amplitude over the covered frames —
-    * the quantity with a closed-form expectation A^2/2 + noiseAmp^2/3 that
-    * the au_features oracle checks. Allocation-free. */
-  def frameStats(bytes: Array[Byte], len: Int, frameMs: Int): (Long, Double, Double, Double) = {
-    if (bytes == null || len < HeaderBytes) return (0L, 0.0, 0.0, 0.0)
-    def le32(off: Int): Int =
-      (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8) |
-        ((bytes(off + 2) & 0xFF) << 16) | ((bytes(off + 3) & 0xFF) << 24)
-    if (!(bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F'))
-      return (0L, 0.0, 0.0, 0.0)
-    val sr = le32(24)
-    val dataLen = math.min(le32(40), len - HeaderBytes)
-    if (sr <= 0 || dataLen < 0) return (0L, 0.0, 0.0, 0.0)
-    val n = dataLen / 2
-    val frameLen = math.max(1, sr * frameMs / 1000)
-    val nFrames = n / frameLen
-    if (nFrames == 0) return (0L, 0.0, 0.0, 0.0)
-    var rmsSum = 0.0
-    var rmsMax = 0.0
-    var sqSum = 0.0
-    var fI = 0
-    while (fI < nFrames) {
-      var acc = 0.0
-      var i = fI * frameLen
-      val end = i + frameLen
-      while (i < end) {
-        val v = (((bytes(HeaderBytes + 2 * i) & 0xFF)) |
-          (bytes(HeaderBytes + 2 * i + 1) << 8)).toShort / 32767.0
-        acc += v * v
-        i += 1
-      }
-      val rms = StrictMath.sqrt(acc / frameLen)
-      rmsSum += rms
-      if (rms > rmsMax) rmsMax = rms
-      sqSum += acc
-      fI += 1
-    }
-    (nFrames.toLong, rmsSum / nFrames, rmsMax, sqSum / (nFrames.toLong * frameLen))
   }
 
   /** Frame-level RMS (frame = `frameMs` ms, non-overlapping, truncating) —

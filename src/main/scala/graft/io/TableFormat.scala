@@ -822,12 +822,17 @@ object TableFormat {
     * [[expireSnapshots]] to reclaim the superseded generations' bytes.
     * Returns the new snapshot version. */
   def compact(spark: SparkSession, table: String): Int = {
-    val current = read(spark, table)
     val v = currentVersion(table).getOrElse(throw new IllegalStateException(
       s"no committed snapshot at $table"))
     val partitionCol = snapPartitionCol(table, v).getOrElse(
       throw new IllegalStateException(
         s"snapshot manifest at $table lists no partition_col"))
+    // partition discovery re-types the partition column (a bigint bucket
+    // reads back as int); commit it as the manifest's recorded type, or
+    // every later append of the table's own schema is refused as a type change
+    val read0 = read(spark, table)
+    val current = tableSchema(table, v).get(partitionCol)
+      .fold(read0)(t => read0.withColumn(partitionCol, col(partitionCol).cast(t)))
     // carry the column-stats CONTRACT through the rewrite (the manifest
     // records the union over the lineage, so a stat-less append can't
     // launder the stats away) — a compaction that dropped stats would turn

@@ -51,8 +51,10 @@ final class RepairParser(input: CharSequence, strict: Boolean, tryValidJsonSuffi
     * No-op when logging is off (the reference swaps in a noop lambda;
     * here the Option check is the guard). */
   private def log(text: String): Unit = logger.foreach { buf =>
-    val start = math.max(index - 10, 0)
+    // clamped like a Python slice: a cursor more than 10 chars past the end
+    // gives an empty window, not start > end
     val end = math.min(index + 10, s.length)
+    val start = math.min(math.max(index - 10, 0), end)
     buf += LogEntry(text, sub(start, end))
   }
 

@@ -3,7 +3,7 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.audio.{AudioQueries, ClipMeta, Wav}
+import graft.audio.{AudioQueries, ClipMeta}
 import graft.clips.ClipsTable
 
 /** The full end-to-end validation job — the engine's headline workload and
@@ -37,17 +37,21 @@ object ValidationPipeline {
   }
 
   /** Total row count of a parquet file/dir straight from the footers —
-    * driver-side metadata IO only. None when any footer is unreadable. */
-  private def parquetRowCount(pathStr: String): Option[Long] =
+    * driver-side metadata IO only. None when any footer is unreadable or
+    * the directory holds a subdirectory (a nested or partitioned layout,
+    * whose files this top-level listing would miss): the caller then runs
+    * an exact count(). */
+  private[run] def parquetRowCount(pathStr: String): Option[Long] =
     try {
       import scala.jdk.CollectionConverters._
       val p = java.nio.file.Paths.get(pathStr)
       val files: Seq[java.nio.file.Path] =
-        if (java.nio.file.Files.isDirectory(p))
-          scala.util.Using.resource(java.nio.file.Files.list(p))(
-            _.iterator().asScala
-              .filter(f => f.getFileName.toString.endsWith(".parquet")).toSeq)
-        else Seq(p)
+        if (java.nio.file.Files.isDirectory(p)) {
+          val entries = scala.util.Using.resource(java.nio.file.Files.list(p))(
+            _.iterator().asScala.toSeq)
+          if (entries.exists(java.nio.file.Files.isDirectory(_))) return None
+          entries.filter(f => f.getFileName.toString.endsWith(".parquet"))
+        } else Seq(p)
       if (files.isEmpty) return None
       val conf = new org.apache.hadoop.conf.Configuration()
       Some(files.map { f =>
@@ -111,17 +115,10 @@ object ValidationPipeline {
     * is still a pure function of the INPUT, never of the core count, so
     * both parallelism levels of the scaling bench run the exact same
     * partitioning and per-task work — the comparability argument for the
-    * old fixed value carries over unchanged. The env override pins an
-    * exact count for granularity experiments (prior behavior: set it
-    * to 512). */
-  val RowsPerSynthTask: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SYNTH_ROWS_PER_TASK", "1800").toLong
-  private val SynthPartitionsOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_SYNTH_PARTITIONS").map(_.toInt)
+    * old fixed value carries over unchanged. */
+  val RowsPerSynthTask: Long = 1800
   def synthPartitions(rows: Long): Int =
-    SynthPartitionsOverride.getOrElse(
-      math.max(64, math.min(4096,
-        math.ceil(rows.toDouble / RowsPerSynthTask).toInt)))
+    math.max(64, math.min(4096, math.ceil(rows.toDouble / RowsPerSynthTask).toInt))
 
   def verdicts(spark: SparkSession, sfDir: String, replicate: Int = 1): DataFrame = {
     import spark.implicits._
@@ -135,27 +132,15 @@ object ValidationPipeline {
     // 10^12 rows the exchange carries bits, not audio.
     val flagged = meta // already SynthPartitions-partitioned by replicatedBase
       .as[ClipMeta]
-      .mapPartitions { it =>
-        var buf = new Array[Byte](64 * 1024)
-        it.map { m =>
-          val seed = AudioQueries.seedOf(m.clip_id)
-          val snrDb = if (m.ord % 149 == 0) Wav.CorruptSnrDb else Wav.CleanSnrDb
-          val extra = if (m.ord % 157 == 0) 7 else 0
-          val need = Wav.synthLen(m.sr_hz, m.dur_ms, extra)
-          if (need > buf.length) buf = new Array[Byte](need)
-          // fused synth+validate (round-7): one pass, one sine per sample —
-          // bit-identical to synthInto + validateVsClean (PureSpec parity)
-          val (_, snr, n) =
-            Wav.synthValidateInto(buf, seed, m.ord, m.sr_hz, m.dur_ms, snrDb, extra)
-          val durBad = n != m.sr_hz.toLong * m.dur_ms / 1000L
-          val snrBad = snr.isNaN || snr < AudioQueries.SnrThresholdDb
-          val rowBad = m.transcript.isEmpty || m.transcript.contains("") ||
-            m.sr_hz < ClipsTable.SrMin || m.sr_hz > ClipsTable.SrMax ||
-            !ClipsTable.CodecEnum.contains(m.codec) ||
-            snrBad || durBad
-          (m.clip_id, m.ord, m.bucket, rowBad)
-        }
-      }.toDF("clip_id", "ord", "bucket", "row_bad")
+      .mapPartitions(AudioQueries.synthRows(_) { (m, r, _) =>
+        val durBad = r.nSamples != m.sr_hz.toLong * m.dur_ms / 1000L
+        val snrBad = r.snrDb.isNaN || r.snrDb < AudioQueries.SnrThresholdDb
+        val rowBad = m.transcript.isEmpty || m.transcript.contains("") ||
+          m.sr_hz < ClipsTable.SrMin || m.sr_hz > ClipsTable.SrMax ||
+          !ClipsTable.CodecEnum.contains(m.codec) ||
+          snrBad || durBad
+        (m.clip_id, m.ord, m.bucket, rowBad)
+      }).toDF("clip_id", "ord", "bucket", "row_bad")
 
     // anomalous clip_ids (duplicated or absent from refs) from the cheap
     // metadata only — the synth stream above is consumed exactly once.
@@ -196,20 +181,10 @@ object ValidationPipeline {
     val base0 = replicatedBase(spark, sfDir, replicate)
     buckets.map(b => base0.filter(col("bucket").isin(b: _*))).getOrElse(base0)
       .as[ClipMeta]
-      .mapPartitions { it =>
-        var buf = new Array[Byte](64 * 1024)
-        it.map { m =>
-          val seed = AudioQueries.seedOf(m.clip_id)
-          val snrDb = if (m.ord % 149 == 0) Wav.CorruptSnrDb else Wav.CleanSnrDb
-          val extra = if (m.ord % 157 == 0) 7 else 0
-          val need = Wav.synthLen(m.sr_hz, m.dur_ms, extra)
-          if (need > buf.length) buf = new Array[Byte](need)
-          // fused synth+validate (round-7) — see the verdicts pass above
-          val (_, snr, n) =
-            Wav.synthValidateInto(buf, seed, m.ord, m.sr_hz, m.dur_ms, snrDb, extra)
-          (m.clip_id, m.sr_hz, m.dur_ms, m.codec, m.transcript, m.ord, m.bucket, snr, n)
-        }
-      }
+      .mapPartitions(AudioQueries.synthRows(_) { (m, r, _) =>
+        (m.clip_id, m.sr_hz, m.dur_ms, m.codec, m.transcript, m.ord, m.bucket,
+          r.snrDb, r.nSamples)
+      })
       .toDF("clip_id", "sr_hz", "dur_ms", "codec", "transcript", "ord", "bucket",
         "snr_db", "n_samples")
   }

@@ -72,7 +72,7 @@ class EngineSpec extends AnyFunSuite {
     val flagged = {
       import spark.implicits._
       graft.audio.AudioQueries.fullFrom(spark, meta).map { c =>
-        val snr = graft.audio.Wav.snrVsClean(c.bytes, graft.audio.AudioQueries.seedOf(c.clip_id))
+        val snr = graft.audio.WavReference.snrVsClean(c.bytes, graft.audio.AudioQueries.seedOf(c.clip_id))
         val n = graft.audio.Wav.decode(c.bytes).map(_._2.length.toLong).getOrElse(-1L)
         (c.clip_id, c.sr_hz, c.dur_ms, c.codec, c.transcript, c.ord, c.bucket,
           snr.isNaN || snr < 30.0, n != c.sr_hz.toLong * c.dur_ms / 1000L)

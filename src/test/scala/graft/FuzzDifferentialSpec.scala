@@ -8,7 +8,8 @@ import graft.repair._
   * random corruption operators (quote swaps, truncation, prose, fences,
   * comments, bare keys, doubled docs, escape mangling, ...) with expected
   * outputs computed by executing the reference library at extraction time.
-  * The engine must agree on every case. */
+  * The engine must agree on every case, and its logging path
+  * (`repairWithLog`) must repair every case to the same value. */
 class FuzzDifferentialSpec extends AnyFunSuite {
 
   test("differential fuzz corpus agrees with the reference") {
@@ -33,6 +34,15 @@ class FuzzDifferentialSpec extends AnyFunSuite {
           catch { case e: Throwable => s"<exception ${e.getClass.getSimpleName}: ${e.getMessage}>" }
         if (got != expected)
           failures ::= s"input=${esc(input)}\n  expected=${esc(expected)}\n  got     =${esc(got)}"
+        // the logging path repairs to the same value and never throws
+        val logged =
+          try JsonRepair.repairWithLog(input)._1 match {
+            case JStr("") => ""
+            case v => PyJson.dumps(v)
+          }
+          catch { case e: Throwable => s"<exception ${e.getClass.getSimpleName}: ${e.getMessage}>" }
+        if (logged != got)
+          failures ::= s"input=${esc(input)}\n  repair       =${esc(got)}\n  repairWithLog=${esc(logged)}"
       case _ =>
     }
     info(s"fuzz: ${items.size - failures.size}/${items.size}")

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.{Drift, TDigest}
-import graft.audio.Wav
+import graft.audio.{Wav, WavReference}
 
 /** No-Spark unit tests: WAV codec round-trip, SNR invariant separation,
   * t-digest quantile accuracy + merge associativity, drift math. */
@@ -19,35 +19,10 @@ class PureSpec extends AnyFunSuite {
   test("clean clip SNR is ~40 dB, corrupted ~10 dB; threshold 30 separates") {
     val clean = Wav.synth(7, 7, 22050, 120, snrDb = Wav.CleanSnrDb)
     val bad = Wav.synth(7, 7, 22050, 120, snrDb = Wav.CorruptSnrDb)
-    val sClean = Wav.snrVsClean(clean, 7)
-    val sBad = Wav.snrVsClean(bad, 7)
+    val sClean = WavReference.snrVsClean(clean, 7)
+    val sBad = WavReference.snrVsClean(bad, 7)
     assert(sClean > 35.0 && sClean < 45.0, s"clean snr=$sClean")
     assert(sBad > 5.0 && sBad < 15.0, s"bad snr=$sBad")
-  }
-
-  test("fast Chebyshev kernel is invariant-equivalent to the StrictMath kernel") {
-    val buf = new Array[Byte](64 * 1024)
-    for (seed <- Seq(7L, 123L, 599L); sr <- Seq(8000, 44100); dur <- Seq(20, 260)) {
-      val len = Wav.synthInto(buf, seed, seed, sr, dur, Wav.CleanSnrDb, 0, fast = true)
-      val (fastSnr, n1) = Wav.validateVsClean(buf, len, seed, fast = true)
-      val (slowSnr, n2) = Wav.validateVsClean(buf, len, seed, fast = false)
-      assert(n1 == n2)
-      // recurrence error (~1e-9 over the longest clip) is far below the
-      // PCM16 quantization floor, so both kernels agree on the invariant
-      // and nearly agree on the number
-      assert(fastSnr >= 30 && slowSnr >= 30, s"clean snr fast=$fastSnr slow=$slowSnr")
-      assert(math.abs(fastSnr - slowSnr) < 0.1, s"fast=$fastSnr slow=$slowSnr")
-      // planted corrupt rows trip the invariant under the fast kernel too
-      val lenB = Wav.synthInto(buf, seed, seed, sr, dur, Wav.CorruptSnrDb, 0, fast = true)
-      assert(Wav.validateVsClean(buf, lenB, seed, fast = true)._1 < 30)
-    }
-    // cross-kernel: fast-synth bytes validated by the slow kernel (and the
-    // reverse) still clear SNR>=30 — the kernels are interchangeable at
-    // the invariant-contract level, so a mixed fleet cannot misclassify
-    val len = Wav.synthInto(buf, 42L, 42L, 44100, 260, Wav.CleanSnrDb, 0, fast = false)
-    assert(Wav.validateVsClean(buf, len, 42L, fast = true)._1 >= 30)
-    val len2 = Wav.synthInto(buf, 42L, 42L, 44100, 260, Wav.CleanSnrDb, 0, fast = true)
-    assert(Wav.validateVsClean(buf, len2, 42L, fast = false)._1 >= 30)
   }
 
   test("synthesis is byte-deterministic") {
@@ -67,82 +42,65 @@ class PureSpec extends AnyFunSuite {
     assert(Wav.frameRms(b, 20).length == 5)
   }
 
-  test("validateVsClean == decode + snrVsClean + length (fused path parity)") {
-    for {
-      sr <- Seq(8000, 22050, 48000)
-      dur <- Seq(20, 105, 499)
-      snr <- Seq(Wav.CleanSnrDb, Wav.CorruptSnrDb)
-      extra <- Seq(0, 7)
-    } {
-      val b = Wav.synth(11, 13, sr, dur, snr, extra)
-      assert(b.length == Wav.synthLen(sr, dur, extra))
-      val (fusedSnr, fusedN) = Wav.validateVsClean(b, b.length, 11)
-      val Some((_, samples)) = Wav.decode(b)
-      val refSnr = Wav.snrVsClean(b, 11)
-      assert(fusedN == samples.length.toLong)
-      assert(fusedSnr == refSnr, s"sr=$sr dur=$dur snr=$snr")
-    }
-    assert(Wav.validateVsClean(Array[Byte](1, 2, 3), 3, 1) == ((Double.NaN, -1L))
-      || Wav.validateVsClean(Array[Byte](1, 2, 3), 3, 1)._2 == -1L)
+  // The kernel against the unfused test-side forms, bit for bit, over the
+  // grid sr {8000, 22050, 48000} x dur {20, 105, 499} x clean/corrupt x
+  // extra {0, 7} x frameMs {0, 20}, plus the clip with no samples. The three
+  // parity tests below keep the names of the kernels they once compared:
+  // `synthInto` is the reference loop in WavReference, `validateVsClean`'s
+  // (SNR, sample count) is snrVsClean and the length over decode,
+  // `synthMeasureInto` is synthValidateInto with frameMs set, and
+  // `frameStats` is the kernel's frame features.
+  private def same(a: Double, b: Double): Boolean =
+    java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b)
+
+  private def parityGrid(frameMs: Int): Seq[(Int, Int, Double, Int, Int)] = for {
+    sr <- Seq(8000, 22050, 48000)
+    dur <- Seq(20, 105, 499)
+    snr <- Seq(Wav.CleanSnrDb, Wav.CorruptSnrDb)
+    extra <- Seq(0, 7)
+  } yield (sr, dur, snr, extra, frameMs)
+
+  /** Checks written bytes, sample count, SNR and frame features of one
+    * grid point (sr, durMs, snrDb, extraMs, frameMs) against the reference. */
+  private def checkParity(p: (Int, Int, Double, Int, Int)): Unit = {
+    val (sr, dur, snr, extra, frameMs) = p
+    val seed = 11L
+    val ref = new Array[Byte](Wav.synthLen(sr, dur, extra))
+    val refLen = WavReference.synthInto(ref, seed, 13L, sr, dur, snr, extra)
+    val got = new Array[Byte](Wav.synthLen(sr, dur, extra))
+    val r = Wav.synthValidateInto(got, seed, 13L, sr, dur, snr, extra, frameMs)
+    assert(r.len == refLen && java.util.Arrays.equals(ref, got), s"bytes $p")
+    val Some((_, samples)) = Wav.decode(ref)
+    assert(r.nSamples == samples.length.toLong, s"samples $p")
+    assert(same(r.snrDb, WavReference.snrVsClean(ref, seed)), s"snr $p")
+    if (samples.isEmpty) assert(r.snrDb.isNaN, s"empty clip snr $p")
+    val rms = if (frameMs == 0) Array.empty[Double] else Wav.frameRms(ref, frameMs)
+    assert(r.nFrames == rms.length.toLong, s"frames $p")
+    val (mean, max, meanSq) =
+      if (rms.isEmpty) (0.0, 0.0, 0.0)
+      else (rms.sum / rms.length, rms.max, WavReference.meanSq(ref, frameMs))
+    assert(same(r.rmsMean, mean) && same(r.rmsMax, max) && same(r.meanSq, meanSq),
+      s"features $p")
   }
 
+  private val emptyClip = (8000, 0, Wav.CleanSnrDb, 0, 20) // SNR NaN, no frames
+
   test("synthValidateInto == synthInto + validateVsClean (fused synth+validate parity)") {
-    // the round-7 fused kernel must be BIT-identical to the two-call
-    // sequence on every output: written bytes, snr, sample count — for
-    // both sine kernels, every sr/dur corner, both injection classes
-    for {
-      fast <- Seq(false, true)
-      sr <- Seq(8000, 22050, 48000)
-      dur <- Seq(20, 105, 499)
-      snr <- Seq(Wav.CleanSnrDb, Wav.CorruptSnrDb)
-      extra <- Seq(0, 7)
-    } {
-      val seed = 11L
-      val ref = new Array[Byte](Wav.synthLen(sr, dur, extra))
-      val refLen = Wav.synthInto(ref, seed, 13L, sr, dur, snr, extra, fast = fast)
-      val (refSnr, refN) = Wav.validateVsClean(ref, refLen, seed, fast = fast)
-      val fused = new Array[Byte](Wav.synthLen(sr, dur, extra))
-      val (len, gotSnr, gotN) =
-        Wav.synthValidateInto(fused, seed, 13L, sr, dur, snr, extra, fast = fast)
-      assert(len == refLen)
-      assert(java.util.Arrays.equals(ref, fused), s"bytes diverge sr=$sr dur=$dur")
-      assert(gotN == refN)
-      assert(gotSnr == refSnr, s"fast=$fast sr=$sr dur=$dur snr=$snr extra=$extra")
-    }
+    (parityGrid(frameMs = 0) :+ emptyClip.copy(_5 = 0)).foreach(checkParity)
   }
 
   test("synthMeasureInto == synthInto + validateVsClean + frameStats (fully fused parity)") {
-    for {
-      fast <- Seq(false, true)
-      sr <- Seq(8000, 22050, 48000)
-      dur <- Seq(20, 105, 499)
-      snr <- Seq(Wav.CleanSnrDb, Wav.CorruptSnrDb)
-      extra <- Seq(0, 7)
-    } {
-      val seed = 11L
-      val ref = new Array[Byte](Wav.synthLen(sr, dur, extra))
-      val refLen = Wav.synthInto(ref, seed, 13L, sr, dur, snr, extra, fast = fast)
-      val (refSnr, refN) = Wav.validateVsClean(ref, refLen, seed, fast = fast)
-      val (refF, refMean, refMax, refSq) = Wav.frameStats(ref, refLen, 20)
-      val fused = new Array[Byte](Wav.synthLen(sr, dur, extra))
-      val (len, gotSnr, gotN, gotF, gotMean, gotMax, gotSq) =
-        Wav.synthMeasureInto(fused, seed, 13L, sr, dur, snr, extra, 20, fast = fast)
-      assert(len == refLen && java.util.Arrays.equals(ref, fused))
-      assert(gotSnr == refSnr && gotN == refN)
-      assert(gotF == refF, s"fast=$fast sr=$sr dur=$dur")
-      assert(gotMean == refMean && gotMax == refMax && gotSq == refSq,
-        s"fast=$fast sr=$sr dur=$dur snr=$snr extra=$extra")
-    }
+    (parityGrid(frameMs = 20) :+ emptyClip).foreach(checkParity)
   }
 
   test("frameStats == frameRms-derived features (fused path parity)") {
     for (sr <- Seq(8000, 44100); dur <- Seq(20, 347)) {
       val b = Wav.synth(3, 9, sr, dur)
       val rms = Wav.frameRms(b, 20)
-      val (n, mean, mx, _) = Wav.frameStats(b, b.length, 20)
-      assert(n == rms.length.toLong)
-      assert(mean == rms.sum / rms.length)
-      assert(mx == rms.max)
+      val r = Wav.synthValidateInto(new Array[Byte](b.length), 3, 9, sr, dur, frameMs = 20)
+      assert(r.nFrames == rms.length.toLong)
+      assert(r.rmsMean == rms.sum / rms.length)
+      assert(r.rmsMax == rms.max)
     }
   }
 
@@ -154,8 +112,8 @@ class PureSpec extends AnyFunSuite {
       dur <- Seq(20, 499)
       snr <- Seq(Wav.CleanSnrDb, Wav.CorruptSnrDb)
     } {
-      val b = Wav.synth(seed, seed + 1, sr, dur, snr)
-      val (_, _, _, meanSq) = Wav.frameStats(b, b.length, 20)
+      val meanSq = Wav.synthValidateInto(new Array[Byte](Wav.synthLen(sr, dur)),
+        seed, seed + 1, sr, dur, snr, frameMs = 20).meanSq
       val expected = Wav.expectedMeanSq(snr)
       assert(math.abs(meanSq - expected) < graft.audio.AudioQueries.PowerTolerance,
         s"seed=$seed sr=$sr dur=$dur snr=$snr meanSq=$meanSq expected=$expected")

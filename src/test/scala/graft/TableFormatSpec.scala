@@ -91,6 +91,21 @@ class TableFormatSpec extends AnyFunSuite {
     assert(TableFormat.read(spark, table).count() == total)
   }
 
+  test("compact keeps the partition column's type: appends still commit afterwards") {
+    val table = Files.createTempDirectory("graft-table-compact-append").toString
+    val clips = ClipsTable.base(spark, sfDir)
+    assert(clips.schema("bucket").dataType == org.apache.spark.sql.types.LongType)
+    TableFormat.commit(clips.filter(col("ord") % 3 === 0), table, "bucket")
+    TableFormat.append(clips.filter(col("ord") % 3 === 1), table, "bucket")
+    TableFormat.compact(spark, table)
+    // partition discovery reads bucket back as int; the compacted snapshot
+    // must still record bigint so the table's own rows append
+    TableFormat.append(clips.filter(col("ord") % 3 === 2), table, "bucket")
+    val got = TableFormat.read(spark, table).select("clip_id", "ord", "bucket")
+    assert(got.count() == clips.count())
+    assert(got.exceptAll(clips.select("clip_id", "ord", "bucket")).isEmpty)
+  }
+
   test("string partition column: manifest stays valid JSON and reads back") {
     // round-2 advice: partition values were embedded unquoted in the
     // manifest, so a non-numeric partition column produced invalid JSON and
