@@ -21,8 +21,11 @@ import graft.dsl.CheckSuite
   *     todo-set so a partial crash rewrites the same dir idempotently
   *     (exactly-once results without snapshot atomicity; the Iceberg
   *     binding would replace this with snapshot commits — SURVEY.md §7.5);
-  *   - the input is explicitly range-partitioned on the key column before
-  *     the verdict aggregation (north rule: explicit partitioning).
+  *   - each batch hash-partitions its input on the bucket column (north
+  *     rule: explicit partitioning), so the input is derived in one pass,
+  *     the verdict aggregate needs no further exchange, the verdict plan
+  *     runs once (its rows are collected, then written from the driver),
+  *     and each bucket dir gets one file per write.
   *
   * This is the engine analogue of the reference's file-position resume
   * (`load()` from fd.tell(), json_repair.py:265-299): prior content
@@ -107,16 +110,17 @@ object Runner {
     if (todo.isEmpty) return RunSummary(Nil, done.toSeq.sorted)
 
     // Full input feeds the compiler (dataset-level checks are global);
-    // `scope` restricts what this batch reports. Explicit range partition
-    // on the key ahead of the key-shuffled operators (north rule).
-    // Persisted across the two jobs below (violations write + verdicts
-    // write): the input lineage may embed the expensive fused synth pass,
-    // which would otherwise run once per job. The frame is NARROW (metadata
-    // + audio measurements, no bytes), so at 10^12 rows this is a
-    // disk-spillable cache of the cheap columns, not the audio payload;
-    // released before returning.
+    // `scope` restricts what this batch reports. Explicit hash partition on
+    // the bucket column (north rule): it samples nothing, so the input
+    // lineage — which may embed the expensive fused synth pass — runs once,
+    // and each bucket lands in one partition, the key of the verdict
+    // aggregate and of the per-bucket writes. Persisted because the
+    // violations write and the verdict collect both read it. The frame is
+    // NARROW (metadata + audio measurements, no bytes), so at 10^12 rows
+    // this is a disk-spillable cache of the cheap columns, not the audio
+    // payload.
     val batchInput = scopedInput.map(f => f(todo)).getOrElse(df)
-    val repart = batchInput.repartitionByRange(totalBuckets, col(suite.keyColumn))
+    val input = batchInput.repartition(totalBuckets, col(suite.bucketColumn))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // outputs are keyed PER BUCKET (dynamic partition overwrite): a retry
@@ -126,25 +130,25 @@ object Runner {
     // the Iceberg binding would replace this with snapshot commits.
     val batchId = todo.mkString("-").hashCode.toHexString
     val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    // unpersist in finally: a throw from either write or the collect must
-    // not leak the cached narrow frame for the rest of the session
-    val results = try {
-      val violations =
-        CheckCompiler.violationsWithBucket(repart, suite, Some(todo), globalInput)
-      violations.write.mode("overwrite").options(dyn)
+    val verdicts = CheckCompiler.verdicts(input, suite, Some(todo), globalInput)
+    // unpersist in finally: a throw from the write or the collect must not
+    // leak the cached narrow frame for the rest of the session
+    val rows = try {
+      CheckCompiler.violationsWithBucket(input, suite, Some(todo), globalInput)
+        .write.mode("overwrite").options(dyn)
         .partitionBy("bucket").parquet(s"$outDir/violations")
+      verdicts.collect() // one row per bucket: the verdict plan runs once
+    } finally input.unpersist(false)
+    spark.createDataFrame(rows.toSeq.asJava, verdicts.schema)
+      .write.mode("overwrite").options(dyn)
+      .partitionBy("bucket").parquet(s"$outDir/verdicts")
+    val results =
+      rows.map(r => BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
 
-      val verdicts = CheckCompiler.verdicts(repart, suite, Some(todo), globalInput)
-      verdicts.write.mode("overwrite").options(dyn)
-        .partitionBy("bucket").parquet(s"$outDir/verdicts")
-
-      // durable results exist for every bucket in this batch -> commit ONE
-      // atomic manifest for the whole batch (temp + rename). All-or-nothing:
-      // a crash mid-write leaves the batch unmanifested, so the retry reuses
-      // the same todo set / batchId and overwrites the same output dirs.
-      verdicts.collect().map(r =>
-        BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
-    } finally repart.unpersist(false) // 2 writes + collect done (or failed)
+    // durable results exist for every bucket in this batch -> commit ONE
+    // atomic manifest for the whole batch (temp + rename). All-or-nothing:
+    // a crash mid-write leaves the batch unmanifested, so the retry reuses
+    // the same todo set / batchId and overwrites the same output dirs.
     val wallMs = (System.nanoTime() - t0) / 1000000
     val byBucket = results.map(r => r.bucket -> r).toMap
     val entries = todo.map { b =>

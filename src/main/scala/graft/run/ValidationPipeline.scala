@@ -20,7 +20,15 @@ object ValidationPipeline {
     * bucket count so bucketing, duplicate collisions and seed recovery all
     * survive the shift). Same job shape at k times the rows — the regime the
     * 10^12-row target actually runs in, where fixed stage overhead is noise. */
-  def replicatedBase(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
+  def replicatedBase(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    replicate(spark, ClipsTable.base(spark, sfDir), k)
+
+  /** [[replicatedBase]] split to the synth task granularity — the input of
+    * the fused synth pass in [[verdicts]] and [[augmented]]. Cheap
+    * metadata-only lineages (the anomaly aggregate, a Runner's
+    * `globalInput`) read [[replicatedBase]] instead, which would otherwise
+    * pay this exchange only to re-shuffle by key. */
+  private def synthInput(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     // repartition the BASE (1/k of the rows) before the broadcast fan-out:
     // the replicated rows inherit the partitioning, so the synth stage gets
     // its task granularity while the exchange carries only the
@@ -62,12 +70,6 @@ object ValidationPipeline {
           _.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum)
       }.sum)
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** [[replicatedBase]] minus the synth-stage repartition — the lineage for
-    * cheap metadata-only side branches (the anomaly aggregate), which would
-    * otherwise pay the 512-partition exchange only to re-shuffle by key. */
-  private def replicatedMeta(spark: SparkSession, sfDir: String, k: Int): DataFrame =
-    replicate(spark, ClipsTable.base(spark, sfDir).select("clip_id", "ord"), k)
 
   private def replicate(spark: SparkSession, base: DataFrame, k: Int): DataFrame =
     if (k <= 1) base
@@ -122,7 +124,7 @@ object ValidationPipeline {
 
   def verdicts(spark: SparkSession, sfDir: String, replicate: Int = 1): DataFrame = {
     import spark.implicits._
-    val meta = replicatedBase(spark, sfDir, replicate)
+    val meta = synthInput(spark, sfDir, replicate)
     // One fused typed pass per row: synthesize into a task-reused buffer,
     // decode+SNR in a single allocation-free sweep, fold in the metadata
     // checks — so (a) the 30 KB bytes column never round-trips the encoder
@@ -130,7 +132,7 @@ object ValidationPipeline {
     // the 32-thread level's headroom and sink N->4N scaling efficiency),
     // and (c) only four narrow columns enter the clip_id shuffle — at
     // 10^12 rows the exchange carries bits, not audio.
-    val flagged = meta // already SynthPartitions-partitioned by replicatedBase
+    val flagged = meta // already split to synth granularity by synthInput
       .as[ClipMeta]
       .mapPartitions(AudioQueries.synthRows(_) { (m, r, _) =>
         val durBad = r.nSamples != m.sr_hz.toLong * m.dur_ms / 1000L
@@ -150,7 +152,8 @@ object ValidationPipeline {
     // be allowed to fall back to a shuffled join of NARROW rows; AQE
     // converts it to broadcast at runtime whenever the anomaly side is
     // actually small, and skew-splits the probe side when it is not.
-    val anomalies = replicatedMeta(spark, sfDir, replicate).groupBy("clip_id")
+    val anomalies = replicatedBase(spark, sfDir, replicate).select("clip_id", "ord")
+      .groupBy("clip_id")
       .agg(count(lit(1)).as("__cnt"),
         max(when(col("ord") % 131 =!= 0, 1).otherwise(0)).as("__present"))
       .filter(col("__cnt") > 1 || col("__present") === 0)
@@ -178,7 +181,7 @@ object ValidationPipeline {
     // bucket filter through mapPartitions, so a resume run passes the todo
     // set here and the synth pass runs ONLY for unfinished buckets — the
     // proportional-resume property Bench's resume section measures
-    val base0 = replicatedBase(spark, sfDir, replicate)
+    val base0 = synthInput(spark, sfDir, replicate)
     buckets.map(b => base0.filter(col("bucket").isin(b: _*))).getOrElse(base0)
       .as[ClipMeta]
       .mapPartitions(AudioQueries.synthRows(_) { (m, r, _) =>

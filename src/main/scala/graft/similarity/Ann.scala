@@ -29,16 +29,21 @@ object Ann {
     * cost ~128 interpreted lambda invocations in the pair-scoring hot
     * path. The UDF folds left over the same element order with the same
     * `acc + x(i)*y(i)` double arithmetic, so results are bit-identical
-    * (the ann and dd_embed oracles hash-match on exactly this). */
+    * (the ann and dd_embed oracles hash-match on exactly this). Like
+    * `aggregate(zip_with(...))`, it is NULL when either array is null or
+    * the lengths differ (zip_with pads the shorter side with nulls). */
   private val dotUdf = udf((a: Seq[Double], b: Seq[Double]) => {
-    val n = math.min(a.length, b.length)
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += a(i) * b(i); i += 1 }
-    acc
+    if (a == null || b == null || a.length != b.length) null
+    else {
+      val n = a.length
+      var acc = 0.0
+      var i = 0
+      while (i < n) { acc += a(i) * b(i); i += 1 }
+      java.lang.Double.valueOf(acc)
+    }
   })
 
-  private def dot(a: Column, b: Column): Column = dotUdf(a, b)
+  private[graft] def dot(a: Column, b: Column): Column = dotUdf(a, b)
 
   private def toDouble(c: Column): Column = transform(c, x => x.cast("double"))
 

@@ -211,6 +211,21 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("Ann.dot is NULL on a null or ragged vector, like aggregate(zip_with)") {
+    import org.apache.spark.sql.functions.{col, expr}
+    import spark.implicits._
+    val df = Seq(
+      (1, Option(Seq(1.0, 2.0, 3.0)), Option(Seq(4.0, 5.0, 6.0))),
+      (2, None, Option(Seq(1.0))),
+      (3, Option(Seq(1.0, 2.0)), Option(Seq(1.0, 2.0, 3.0)))).toDF("id", "a", "b")
+      .repartition(2) // evaluate on the executors, not folded on the driver
+    val got = df.select(col("id"), Ann.dot(col("a"), col("b")),
+        expr("aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, p) -> acc + p)"))
+      .collect().map(r => r.getInt(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+    assert(got(1) == ((Some(32.0), Some(32.0))))
+    assert(got(2) == ((None, None)) && got(3) == ((None, None)))
+  }
+
   test("keepTable: canonical docs commit through a snapshot and read back exactly") {
     import graft.io.TableFormat
     val dir = java.nio.file.Files.createTempDirectory("graft-keeptest").toString
