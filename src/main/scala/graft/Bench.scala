@@ -656,8 +656,7 @@ object Bench {
   /** ABSOLUTE host-speed stamp (Mops/s of the sin loop at full width):
     * comparable across rounds on the same host class, so per-query deltas
     * can be normalized for host drift instead of hand-waved. Kernel owned
-    * by HostProbe (shared with the standalone probe and the scaling
-    * section's stamp gate). */
+    * by HostProbe (shared with the scaling section's stamp gate). */
   private def cpuRateMops(threads: Int): Double =
     graft.tools.HostProbe.sinMops(threads)
 

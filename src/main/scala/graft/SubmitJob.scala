@@ -6,13 +6,13 @@ import graft.run.{Runner, ValidationPipeline}
 
 /** spark-submit entry for the COMPLETE production lifecycle — the north
   * rule end to end in one launch: validate the clips table (metadata checks
-  * + the two audio invariants from the fused synth pass), write per-bucket
-  * pass/fail verdicts AND violation rows as partitioned side tables, commit
-  * a per-batch checkpoint manifest (lineage + metrics), and bind the
-  * verdicts to an Iceberg-layout snapshot table. Re-running the same
-  * command resumes: completed buckets are skipped (their manifests exist),
-  * so a crashed run continues where it stopped and a finished run is a
-  * no-op.
+  * + the two audio invariants from the fused synth pass), write the
+  * violation rows as a partitioned side table, commit a per-batch
+  * checkpoint manifest (lineage + metrics + per-bucket pass/fail
+  * verdicts), and bind the verdicts to an Iceberg-layout snapshot table.
+  * Re-running the same command resumes: completed buckets are skipped
+  * (their manifests exist), so a crashed run continues where it stopped
+  * and a finished run is a no-op.
   *
   * {{{
   * spark-submit --master local[24] --class graft.SubmitJob <jar> <sfDir> <outDir> [maxBuckets]

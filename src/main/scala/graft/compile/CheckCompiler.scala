@@ -193,8 +193,9 @@ object CheckCompiler {
 
   /** Per-bucket pass/fail verdicts. A row is "bad" if any row check fails,
     * its key is duplicated (globally), or its key is missing from the ref
-    * table. */
-  /** `dupKeys` (round-7): a caller-precomputed duplicated-key frame per
+    * table.
+    *
+    * `dupKeys` (round-7): a caller-precomputed duplicated-key frame per
     * unique-check column (one column, named like the checked column,
     * holding exactly the keys a [[Unique]] aggregate over the intended
     * keyspace would emit). When present for a column, the compiler joins

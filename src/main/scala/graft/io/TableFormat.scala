@@ -123,6 +123,24 @@ object TableFormat {
     }
   }
 
+  // read-only after construction: its default resources load once, not
+  // once per partition dir of a commit
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The engine's one parquet-footer reader: the row groups (row counts,
+    * column-chunk statistics) of each file, footers opened one after
+    * another on the calling thread — no Spark job, no data pages. Throws
+    * on the first unreadable footer; callers fall back to an exact count
+    * or scan, never to a partial answer. */
+  private[graft] def footerRowGroups(files: Seq[Path])
+      : Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] =
+    files.flatMap { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), hadoopConf)
+      scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(in))(
+        _.getFooter.getBlocks.asScala.toSeq)
+    }
+
   /** Manifest stats straight from the written parquet FOOTERS — the
     * Iceberg mechanism: per-partition row counts and min/max bounds read
     * from file metadata ON THE DRIVER, no Spark job, no data IO (round-7:
@@ -130,27 +148,23 @@ object TableFormat {
     * then a scan read-back, for these numbers). Returns None when any
     * required statistic is unavailable, unhandled, or uncomparable — the
     * caller then falls back to [[scanPartStats]]; correctness never
-    * depends on footer stats being readable. Binary (string) footer
-    * bounds use parquet's unsigned-lexicographic ordering, which is
-    * exactly Spark's UTF8 binary collation and [[cmp]]'s comparison — the
-    * same order readWhere prunes with. */
+    * depends on footer stats being readable. Footers are read one after
+    * another on the calling thread: no pool, no wait to bound. Binary
+    * (string) footer bounds use parquet's
+    * unsigned-lexicographic ordering, which is exactly Spark's UTF8 binary
+    * collation and [[cmp]]'s comparison — the same order readWhere prunes
+    * with. */
   private def footerPartStats(dirPath: Path, pcol: String,
       pdt: org.apache.spark.sql.types.DataType, statsCols: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Option[Seq[PartStats]] = {
     final case class Unavailable() extends RuntimeException
-    val conf = new org.apache.hadoop.conf.Configuration()
     try {
       val subdirs = scala.util.Using.resource(Files.list(dirPath)) { s =>
         s.iterator().asScala.filter(p => Files.isDirectory(p) &&
           p.getFileName.toString.startsWith(s"$pcol=")).toSeq
       }
       if (subdirs.isEmpty) return None
-      // footers are read concurrently (Iceberg reads manifests the same
-      // way): one ~ms metadata read per file is latency-bound, and a
-      // 32-partition commit pays 32 of them
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Some(Await.result(Future.traverse(subdirs) { sub => Future {
+      Some(subdirs.map { sub =>
         val pv = decodePartValue(sub.getFileName.toString.stripPrefix(s"$pcol="), pdt)
         var rows = 0L
         val mins = scala.collection.mutable.Map.empty[String, Any]
@@ -160,45 +174,38 @@ object TableFormat {
             .filter(p => p.getFileName.toString.endsWith(".parquet"))
             .toSeq
         }
-        files.foreach { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f.toUri), conf)
-          scala.util.Using.resource(
-              org.apache.parquet.hadoop.ParquetFileReader.open(in)) { reader =>
-            reader.getFooter.getBlocks.asScala.foreach { block =>
-              rows += block.getRowCount
-              statsCols.foreach { c =>
-                val chunk = block.getColumns.asScala
-                  .find(_.getPath.toDotString == c)
-                  .getOrElse(throw Unavailable())
-                val st = chunk.getStatistics
-                if (st == null) throw Unavailable()
-                if (st.hasNonNullValue) {
-                  val (mn, mx) = chunkStatValues(st, schema(c).dataType)
-                    .getOrElse(throw Unavailable())
-                  mins.get(c) match {
-                    case Some(cur) =>
-                      if (cmp(mn, cur).getOrElse(throw Unavailable()) < 0) mins(c) = mn
-                    case None => mins(c) = mn
-                  }
-                  maxs.get(c) match {
-                    case Some(cur) =>
-                      if (cmp(mx, cur).getOrElse(throw Unavailable()) > 0) maxs(c) = mx
-                    case None => maxs(c) = mx
-                  }
-                } else if (!(st.isNumNullsSet && st.getNumNulls == block.getRowCount)) {
-                  // not provably an all-null chunk: the stats were dropped
-                  // or unreliable — recording (None, None) here would let
-                  // readWhere WRONGLY prune the partition as all-null
-                  throw Unavailable()
-                }
+        footerRowGroups(files).foreach { block =>
+          rows += block.getRowCount
+          statsCols.foreach { c =>
+            val chunk = block.getColumns.asScala
+              .find(_.getPath.toDotString == c)
+              .getOrElse(throw Unavailable())
+            val st = chunk.getStatistics
+            if (st == null) throw Unavailable()
+            if (st.hasNonNullValue) {
+              val (mn, mx) = chunkStatValues(st, schema(c).dataType)
+                .getOrElse(throw Unavailable())
+              mins.get(c) match {
+                case Some(cur) =>
+                  if (cmp(mn, cur).getOrElse(throw Unavailable()) < 0) mins(c) = mn
+                case None => mins(c) = mn
               }
+              maxs.get(c) match {
+                case Some(cur) =>
+                  if (cmp(mx, cur).getOrElse(throw Unavailable()) > 0) maxs(c) = mx
+                case None => maxs(c) = mx
+              }
+            } else if (!(st.isNumNullsSet && st.getNumNulls == block.getRowCount)) {
+              // not provably an all-null chunk: the stats were dropped
+              // or unreliable — recording (None, None) here would let
+              // readWhere WRONGLY prune the partition as all-null
+              throw Unavailable()
             }
           }
         }
         PartStats(pv, rows,
           statsCols.map(c => c -> ((mins.get(c), maxs.get(c)))).toMap)
-      }}, scala.concurrent.duration.Duration.Inf))
+      })
     } catch {
       case _: Unavailable => None
       case scala.util.control.NonFatal(_) => None // unreadable footer → scan path
@@ -431,37 +438,56 @@ object TableFormat {
   def dirStats(table: String, dir: String, colName: String)
       : Option[Seq[(Any, Option[Any], Option[Any])]] = {
     import graft.repair.{JArr, JObj, JStr}
-    def scalar(v: graft.repair.JsonValue): Any = jsonScalar(v)
-    dirMetaFields(table, dir) match {
-      case Some(f) =>
-        val hasCol = f.get("stats_cols") match {
-          case Some(JArr(cs)) => cs.exists { case JStr(c) => c == colName; case _ => false }
-          case _ => false
+    dirMetaFields(table, dir)
+      .filter(_.get("stats_cols").exists {
+        case JArr(cs) => cs.contains(JStr(colName))
+        case _ => false
+      })
+      .flatMap(partitionsAdded)
+      .map { case (pcol, parts) => parts.map { p =>
+        val (lo, hi) = p.get("stats") match {
+          case Some(JObj(st)) => st.get(colName) match {
+            case Some(JObj(mm)) =>
+              (mm.get("min").map(jsonScalar).filter(_ != null),
+               mm.get("max").map(jsonScalar).filter(_ != null))
+            case _ => (None, None)
+          }
+          case _ => (None, None)
         }
-        if (!hasCol) None
-        else f.get("partitions_added") match {
-          case Some(JArr(parts)) =>
-            val pcol = f.get("partition_col") match {
-              case Some(JStr(c)) => c
-              case _ => return None
-            }
-            Some(parts.toSeq.collect { case JObj(p) =>
-              val pv = p.get(pcol).map(scalar).orNull
-              val (lo, hi) = p.get("stats") match {
-                case Some(JObj(st)) => st.get(colName) match {
-                  case Some(JObj(mm)) =>
-                    (mm.get("min").map(scalar).filter(_ != null),
-                     mm.get("max").map(scalar).filter(_ != null))
-                  case _ => (None, None)
-                }
-                case _ => (None, None)
-              }
-              (pv, lo, hi)
-            })
-          case _ => None
-        }
+        (p.get(pcol).map(jsonScalar).orNull, lo, hi)
+      }}
+  }
+
+  /** A dir's partition column and its `partitions_added` entries, from the
+    * dir's metadata fields; None when either is missing. */
+  private def partitionsAdded(f: Map[String, graft.repair.JsonValue])
+      : Option[(String, Seq[collection.Map[String, graft.repair.JsonValue]])] = {
+    import graft.repair.{JArr, JObj, JStr}
+    (f.get("partition_col"), f.get("partitions_added")) match {
+      case (Some(JStr(pc)), Some(JArr(ps))) => Some((pc, ps.toSeq.collect { case JObj(p) => p }))
       case _ => None
     }
+  }
+
+  /** Rows per partition value in snapshot `version`, from the manifests
+    * alone (no Spark job, no data IO): each data dir's `partitions_added`,
+    * minus the values its `dir_excludes` replaced, summed over dirs.
+    * Integral values come back as Long. Throws when a dir's metadata is
+    * gone (legacy layout), where only a scan could answer. */
+  def partitionRows(table: String, version: Int): Map[Any, Long] = {
+    val excludes = dirExcludes(table, version)
+    dataDirs(table, version).flatMap { d =>
+      val (pc, parts) = dirMetaFields(table, d).flatMap(partitionsAdded).getOrElse(
+        throw new IllegalStateException(s"dir $d at $table has no metadata listing its partitions"))
+      val excluded = excludes.getOrElse(d, Seq.empty).toSet
+      parts.map(p => (p.get(pc).map(jsonScalar).orNull, p.get("rows")))
+        .filterNot(e => excluded(e._1)).map {
+          case (pv, Some(graft.repair.JInt(n))) =>
+            (pv match { case b: BigInt => b.toLong: Any; case other => other }) -> n.toLong
+          case (pv, _) => throw new IllegalStateException(
+            s"dir $d at $table records no row count for partition $pv")
+        }
+    }.groupMapReduce(_._1)(_._2)(_ + _)
   }
 
   private val DirVersion = "data/v(\\d+)".r

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 import graft.compile.CheckCompiler
 import graft.dsl.CheckSuite
@@ -14,18 +15,20 @@ import graft.dsl.CheckSuite
   *
   *   - the work unit is the deterministic `bucket` column (the stand-in for
   *     a table partition; at Iceberg scale this is the partition value);
-  *   - each completed bucket gets a manifest JSON (lineage + metrics)
-  *     written atomically (temp file + rename) AFTER its verdict and
-  *     violation rows are durably written — a restart recomputes only
-  *     buckets without a manifest, and batch output dirs are keyed by the
-  *     todo-set so a partial crash rewrites the same dir idempotently
-  *     (exactly-once results without snapshot atomicity; the Iceberg
-  *     binding would replace this with snapshot commits — SURVEY.md §7.5);
+  *   - each batch commits one manifest JSON (lineage + metrics), written
+  *     atomically (temp file + rename) AFTER its violation rows are durably
+  *     written. The manifest is the only record of the per-bucket verdicts:
+  *     [[verdicts]], [[RunSummary]] and the optional snapshot table all
+  *     read it. A restart recomputes only buckets without a manifest, and
+  *     violation dirs are keyed per bucket so a partial crash rewrites the
+  *     same dirs idempotently (exactly-once results without snapshot
+  *     atomicity; the Iceberg binding would replace this with snapshot
+  *     commits — SURVEY.md §7.5);
   *   - each batch hash-partitions its input on the bucket column (north
   *     rule: explicit partitioning), so the input is derived in one pass,
   *     the verdict aggregate needs no further exchange, the verdict plan
-  *     runs once (its rows are collected, then written from the driver),
-  *     and each bucket dir gets one file per write.
+  *     runs once (its rows are collected into the manifest), and each
+  *     violations bucket dir gets one file.
   *
   * This is the engine analogue of the reference's file-position resume
   * (`load()` from fd.tell(), json_repair.py:265-299): prior content
@@ -34,6 +37,8 @@ import graft.dsl.CheckSuite
 object Runner {
 
   final case class BucketResult(bucket: Long, nRows: Long, nBad: Long, pass: Boolean)
+  /** `processed`: this run's manifest entries, one per completed bucket
+    * (a bucket with no input rows is `(b, 0, 0, true)`). */
   final case class RunSummary(processed: Seq[BucketResult], skipped: Seq[Long])
 
   private def manifestDir(outDir: String): Path = Paths.get(outDir, "_manifest")
@@ -47,8 +52,8 @@ object Runner {
     import graft.repair.{JArr, JBool, JInt, JObj}
     val dir = manifestDir(outDir)
     if (!Files.isDirectory(dir)) return Map.empty
-    Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString)
+    // materialized inside Using: the listing stream holds a directory fd
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala.map(_.getFileName.toString).toSeq)
       .filter(n => n.startsWith("batch-") && n.endsWith(".json"))
       .flatMap { n =>
         graft.repair.PyJson.loads(Files.readString(dir.resolve(n))) match {
@@ -114,7 +119,7 @@ object Runner {
     // the bucket column (north rule): it samples nothing, so the input
     // lineage — which may embed the expensive fused synth pass — runs once,
     // and each bucket lands in one partition, the key of the verdict
-    // aggregate and of the per-bucket writes. Persisted because the
+    // aggregate and of the per-bucket violations write. Persisted because the
     // violations write and the verdict collect both read it. The frame is
     // NARROW (metadata + audio measurements, no bytes), so at 10^12 rows
     // this is a disk-spillable cache of the cheap columns, not the audio
@@ -129,33 +134,27 @@ object Runner {
     // manifest commit can never leave duplicate rows for the read-back —
     // the Iceberg binding would replace this with snapshot commits.
     val batchId = todo.mkString("-").hashCode.toHexString
-    val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    val verdicts = CheckCompiler.verdicts(input, suite, Some(todo), globalInput)
     // unpersist in finally: a throw from the write or the collect must not
     // leak the cached narrow frame for the rest of the session
     val rows = try {
       CheckCompiler.violationsWithBucket(input, suite, Some(todo), globalInput)
-        .write.mode("overwrite").options(dyn)
+        .write.mode("overwrite").options(Map("partitionOverwriteMode" -> "dynamic"))
         .partitionBy("bucket").parquet(s"$outDir/violations")
-      verdicts.collect() // one row per bucket: the verdict plan runs once
+      // one row per bucket: the verdict plan runs once
+      CheckCompiler.verdicts(input, suite, Some(todo), globalInput).collect()
     } finally input.unpersist(false)
-    spark.createDataFrame(rows.toSeq.asJava, verdicts.schema)
-      .write.mode("overwrite").options(dyn)
-      .partitionBy("bucket").parquet(s"$outDir/verdicts")
-    val results =
-      rows.map(r => BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+    val byBucket = rows.map(r =>
+      r.getLong(0) -> BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
+    // buckets with zero input rows still complete (empty result)
+    val results = todo.map(b => byBucket.getOrElse(b, BucketResult(b, 0L, 0L, pass = true)))
 
     // durable results exist for every bucket in this batch -> commit ONE
     // atomic manifest for the whole batch (temp + rename). All-or-nothing:
     // a crash mid-write leaves the batch unmanifested, so the retry reuses
     // the same todo set / batchId and overwrites the same output dirs.
     val wallMs = (System.nanoTime() - t0) / 1000000
-    val byBucket = results.map(r => r.bucket -> r).toMap
-    val entries = todo.map { b =>
-      // buckets with zero input rows still complete (empty result)
-      val r = byBucket.getOrElse(b, BucketResult(b, 0L, 0L, pass = true))
-      s"""{"bucket": ${r.bucket}, "n_rows": ${r.nRows}, "n_bad": ${r.nBad}, "pass": ${r.pass}}"""
-    }
+    val entries = results.map(r =>
+      s"""{"bucket": ${r.bucket}, "n_rows": ${r.nRows}, "n_bad": ${r.nBad}, "pass": ${r.pass}}""")
     val json =
       s"""{"batch": "$batchId", "wall_ms": $wallMs, "buckets": [${entries.mkString(", ")}]}"""
     val tmp = manifestDir(outDir).resolve(s".batch-$batchId.tmp")
@@ -165,39 +164,37 @@ object Runner {
     // Iceberg-shaped lineage: append this batch's verdicts as a new table
     // snapshot (manifest-of-files append — time travel per batch)
     snapshotTable.foreach(t => syncSnapshot(spark, outDir, t))
-    RunSummary(results.toSeq.sortBy(_.bucket), done.toSeq.sorted)
+    RunSummary(results, done.toSeq.sorted)
   }
 
   /** Bring the verdict snapshot table up to date with the manifest: append
     * one snapshot holding every manifested bucket the table doesn't have
     * yet (no-op when in sync). Crash-safe in both directions — the
-    * manifest leads, and appends are keyed on the missing-bucket set. */
+    * manifest leads, and appends are keyed on the missing-bucket set. The
+    * buckets the table holds come from its own manifests, so an in-sync
+    * table costs metadata reads and no Spark job. */
   def syncSnapshot(spark: SparkSession, outDir: String, table: String): Unit = {
-    import spark.implicits._
     val manifested = manifestResults(outDir)
     if (manifested.isEmpty) return
-    val inSnapshot: Set[Long] =
-      if (graft.io.TableFormat.currentVersion(table).isEmpty) Set.empty
-      else graft.io.TableFormat.read(spark, table)
-        .select(col("bucket").cast("long")) // partition col is discovered as int
-        .distinct().collect().map(_.getLong(0)).toSet
-    val missing = manifested.keySet.diff(inSnapshot).toSeq.sorted
-    if (missing.nonEmpty) {
-      val batchDf = missing.map { b =>
-        val r = manifested(b)
-        (r.bucket, r.nRows, r.nBad, r.pass)
-      }.toDF("bucket", "n_rows", "n_bad", "pass")
-      graft.io.TableFormat.append(batchDf, table, "bucket")
-    }
+    val inSnapshot = graft.io.TableFormat.currentVersion(table)
+      .fold(Set.empty[Any])(v => graft.io.TableFormat.partitionRows(table, v).keySet)
+    val missing = manifested.keySet.filterNot(inSnapshot).toSeq.sorted
+    if (missing.nonEmpty)
+      graft.io.TableFormat.append(verdictFrame(spark, missing.map(manifested)), table, "bucket")
   }
 
-  /** All verdicts accumulated across batches (for reading back results).
-    * `bucket` is a partition directory on disk — restore its position and
-    * LongType (partition discovery infers int). */
+  /** All verdicts accumulated across batches, read from the batch
+    * manifests (one row per completed bucket, ordered by bucket). */
   def verdicts(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/verdicts")
-      .withColumn("bucket", col("bucket").cast("long"))
-      .select("bucket", "n_rows", "n_bad", "pass")
+    verdictFrame(spark, manifestResults(outDir).values.toSeq.sortBy(_.bucket))
+
+  private val VerdictSchema = StructType(Seq(
+    StructField("bucket", LongType), StructField("n_rows", LongType),
+    StructField("n_bad", LongType), StructField("pass", BooleanType)))
+
+  private def verdictFrame(spark: SparkSession, rs: Seq[BucketResult]): DataFrame =
+    spark.createDataFrame(
+      rs.map(r => Row(r.bucket, r.nRows, r.nBad, r.pass)).asJava, VerdictSchema)
 
   def violations(spark: SparkSession, outDir: String): DataFrame =
     spark.read.parquet(s"$outDir/violations")

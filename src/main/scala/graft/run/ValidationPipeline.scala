@@ -61,14 +61,7 @@ object ValidationPipeline {
           entries.filter(f => f.getFileName.toString.endsWith(".parquet"))
         } else Seq(p)
       if (files.isEmpty) return None
-      val conf = new org.apache.hadoop.conf.Configuration()
-      Some(files.map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toUri), conf)
-        scala.util.Using.resource(
-            org.apache.parquet.hadoop.ParquetFileReader.open(in))(
-          _.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum)
-      }.sum)
+      Some(graft.io.TableFormat.footerRowGroups(files).map(_.getRowCount).sum)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   private def replicate(spark: SparkSession, base: DataFrame, k: Int): DataFrame =
@@ -84,24 +77,6 @@ object ValidationPipeline {
         .drop("__off")
     }
 
-  /** Per-bucket verdicts of the complete suite (metadata + audio).
-    *
-    * The global checks are specialized here: uniqueness and referential
-    * presence (refs is by construction the `ord % 131 != 0` projection of
-    * the same table) are both per-clip_id aggregates of the cheap METADATA
-    * — so they are computed by one hash aggregate over the narrow metadata
-    * scan (map-side partial combine: a 10^9-row hot duplicate costs one row
-    * per task — no window, no single-task hot-spot; see EngineSpec's 10^5×
-    * skewed-dup plan case), filtered to the anomalous keys, and joined
-    * back. The join is deliberately unhinted: AQE broadcasts the anomaly
-    * side when it is small at runtime (the expensive synth stream then
-    * never shuffles), and falls back to a skew-split shuffled join of the
-    * NARROW flagged rows when anomalies scale with the data — this
-    * generator's refs-absent keys are ~1/131 of all clips, which at 10^12
-    * rows is far past any broadcast cap. Either way the wide exchanges
-    * carry bits, never audio. (The generic CheckCompiler path keeps the
-    * anti-join for arbitrary ref tables; equivalence is asserted in
-    * EngineSpec.) */
   /** Task granularity for the CPU-heavy synth+validate fan-out. Round-7:
     * SCALE-ADAPTIVE (guide §2 — "make partitioning scale-adaptive rather
     * than a constant tuned for either local mode or the cluster"): the
@@ -122,6 +97,24 @@ object ValidationPipeline {
   def synthPartitions(rows: Long): Int =
     math.max(64, math.min(4096, math.ceil(rows.toDouble / RowsPerSynthTask).toInt))
 
+  /** Per-bucket verdicts of the complete suite (metadata + audio).
+    *
+    * The global checks are specialized here: uniqueness and referential
+    * presence (refs is by construction the `ord % 131 != 0` projection of
+    * the same table) are both per-clip_id aggregates of the cheap METADATA
+    * — so they are computed by one hash aggregate over the narrow metadata
+    * scan (map-side partial combine: a 10^9-row hot duplicate costs one row
+    * per task — no window, no single-task hot-spot; see EngineSpec's 10^5×
+    * skewed-dup plan case), filtered to the anomalous keys, and joined
+    * back. The join is deliberately unhinted: AQE broadcasts the anomaly
+    * side when it is small at runtime (the expensive synth stream then
+    * never shuffles), and falls back to a skew-split shuffled join of the
+    * NARROW flagged rows when anomalies scale with the data — this
+    * generator's refs-absent keys are ~1/131 of all clips, which at 10^12
+    * rows is far past any broadcast cap. Either way the wide exchanges
+    * carry bits, never audio. (The generic CheckCompiler path keeps the
+    * anti-join for arbitrary ref tables; equivalence is asserted in
+    * EngineSpec.) */
   def verdicts(spark: SparkSession, sfDir: String, replicate: Int = 1): DataFrame = {
     import spark.implicits._
     val meta = synthInput(spark, sfDir, replicate)

@@ -31,9 +31,6 @@ package graft.tools
   * bandwidth-bound kernel is far from 4x and says nothing about health).
   * Calibration observations for the healthy/degraded threshold are in
   * BASELINE.md next to the Mops history.
-  *
-  * Run standalone: `sbt "runMain graft.tools.HostProbe [reps]"` — prints
-  * one GB/s line per rep so a drifting window is visible over minutes.
   */
 object HostProbe {
 
@@ -77,17 +74,9 @@ object HostProbe {
     threads.toLong * chunk * passes * 8L / sec / 1e9
   }
 
-  /** The bracketing stamp Bench records before/after the scaling samples:
-    * one warmup pass (faults the buffer in, JITs the loop) then a ~2-4 s
-    * timed measurement at width 24 — the 4N level's pressure. */
-  def stamp(): Double = {
-    bandwidthGBs(24, 4) // warmup + page-in
-    bandwidthGBs(24, 150)
-  }
-
   /** The latency-bound CPU kernel (StrictMath.sin on raw JVM threads) the
-    * scaling section has used since round 2 — owned here so Bench and the
-    * standalone probe share one definition. Returns the summed sink so the
+    * scaling section has used since round 2 — owned here so Bench's
+    * scaling control and host stamps share one definition. Returns the summed sink so the
     * JIT cannot eliminate the loops. */
   def sinRun(threads: Int, work: Long): Double = {
     val sink = new Array[Double](threads)
@@ -116,15 +105,5 @@ object HostProbe {
   def sinMops(threads: Int = 32): Double = {
     sinRate(threads, 5000000L) // warmup
     sinRate(threads, 100000000L) / 1e6
-  }
-
-  def main(args: Array[String]): Unit = {
-    val reps = args.headOption.map(_.toInt).getOrElse(5)
-    bandwidthGBs(24, 4) // warmup + page-in
-    (1 to reps).foreach { r =>
-      val gbs = bandwidthGBs(24, 150)
-      val mops = sinMops()
-      println(f"[hostprobe] rep $r: $gbs%.2f GB/s (24t, 512 MB set), sin $mops%.1f Mops/s (32t)")
-    }
   }
 }

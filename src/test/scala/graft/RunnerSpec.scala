@@ -147,11 +147,66 @@ class RunnerSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-runner-layout").toString
     Runner.run(spark, df, suite, out, totalBuckets = 8)
     assert(Runner.violations(spark, out).count() == 64)
-    for (d <- Seq("violations", "verdicts"); b <- 0 until 8) {
-      val files = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(out, d, s"bucket=$b")))(
+    for (b <- 0 until 8) {
+      val files = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(out, "violations", s"bucket=$b")))(
         _.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")))
-      assert(files == 1, s"$d/bucket=$b holds $files parquet files")
+      assert(files == 1, s"violations/bucket=$b holds $files parquet files")
     }
+  }
+
+  test("verdict records agree on an empty bucket; an in-sync snapshot sync runs no Spark job") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.dsl._
+    import graft.io.TableFormat
+    // 8 buckets, bucket 5 holds no rows; odd ords fail the row check
+    val rows = (0 until 70).map(i => (f"c$i%03d", Seq(0L, 1L, 2L, 3L, 4L, 6L, 7L)(i % 7), i.toLong))
+    val df = rows.toDF("clip_id", "bucket", "ord")
+    val suite = CheckSuite("clip_id", "bucket",
+      Seq(RowExpr("ord_odd", "ord", col("ord") % 2 === 1, col("ord").cast("string"))), Map.empty)
+    val want = (0L until 8L).map { b =>
+      val in = rows.filter(_._2 == b)
+      val bad = in.count(_._3 % 2 == 1).toLong
+      (b, in.size.toLong, bad, bad == 0)
+    }
+    val out = Files.createTempDirectory("graft-runner-agree").toString
+    val table = s"$out/verdict_table"
+    // stopped after 4 buckets, then resumed: the empty bucket is in the resume
+    val r1 = Runner.run(spark, df, suite, out, totalBuckets = 8, maxBuckets = 4,
+      snapshotTable = Some(table))
+    val r2 = Runner.run(spark, df, suite, out, totalBuckets = 8, snapshotTable = Some(table))
+    def tuples(rs: Seq[Runner.BucketResult]) = rs.map(r => (r.bucket, r.nRows, r.nBad, r.pass))
+    val fromRuns = tuples(r1.processed ++ r2.processed).sortBy(_._1)
+    val fromDir = Runner.verdicts(spark, out).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
+    val fromTable = TableFormat.read(spark, table).collect()
+      .map(r => (r.getAs[Number]("bucket").longValue(), r.getAs[Long]("n_rows"),
+        r.getAs[Long]("n_bad"), r.getAs[Boolean]("pass"))).toSeq.sortBy(_._1)
+    assert(fromRuns == want)
+    assert(fromDir == want)
+    assert(fromTable == want)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "verdicts")))
+
+    // syncing a table that already holds every manifested bucket reads
+    // metadata only: no Spark job starts before the marker job
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      Runner.syncSnapshot(spark, out, table)
+      sc.setJobGroup("after-sync", "marker")
+      spark.range(4).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobGroups.contains("after-sync") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    assert(jobGroups.contains("after-sync"), "marker job never reached the listener")
+    val beforeMarker = jobGroups.asScala.takeWhile(_ != "after-sync").toSeq
+    assert(beforeMarker.isEmpty, s"in-sync syncSnapshot ran ${beforeMarker.size} Spark jobs")
   }
 
   test("verdict snapshots track the manifest, incl. backfill after a trailing crash") {

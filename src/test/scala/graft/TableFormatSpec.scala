@@ -234,6 +234,29 @@ class TableFormatSpec extends AnyFunSuite {
     // the replaced partition's v1 files are never opened by the new read
     assert(!got.inputFiles.exists(f => f.contains("/v1/") && f.contains("/bucket=3/")),
       "excluded partition subdir was read")
+    // the manifests alone give the same per-partition rows: v1's bucket 3
+    // is excluded, the fresh dir's counts instead
+    val readRows = got.groupBy("bucket").count().collect()
+      .map(r => (r.getAs[Number](0).longValue(): Any) -> r.getLong(1)).toMap
+    assert(TableFormat.partitionRows(table, v2) == readRows)
+  }
+
+  test("stats of a type the footer reader skips come from the scan fallback, exactly") {
+    // chunkStatValues handles no DateType, so the commit takes scanPartStats
+    val table = Files.createTempDirectory("graft-stats-fallback").toString
+    val clips = ClipsTable.base(spark, sfDir)
+      .withColumn("d", expr("date_add(date'2024-01-01', cast(ord % 97 as int))"))
+    TableFormat.commit(clips, table, "bucket", statsCols = Seq("d"))
+    val exact = clips.groupBy("bucket")
+      .agg(count(lit(1)), min("d").cast("string"), max("d").cast("string"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3))).toSet
+    val rows = TableFormat.partitionRows(table, 1)
+    val bounds = TableFormat.dirStats(table, "data/v1", "d").get
+    val manifest = bounds.map { case (pv, lo, hi) =>
+      val b = pv.asInstanceOf[BigInt].toLong
+      (b, rows(b), lo.get.toString, hi.get.toString)
+    }.toSet
+    assert(exact.size == 32 && manifest == exact)
   }
 
   test("overwrite composes with append, compaction, and stats-pruned reads") {
