@@ -32,7 +32,11 @@ object ClipsTable {
 
   /** clips without bytes: (clip_id, sr_hz, dur_ms, codec, transcript, ord, bucket). */
   def base(spark: SparkSession, sfDir: String): DataFrame = {
-    val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+    // the stored types of the three columns read: declared, so building
+    // the frame infers nothing from the files and starts no Spark job
+    val orders = spark.read
+      .schema("o_orderkey bigint, o_orderstatus string, o_orderpriority string")
+      .parquet(s"$sfDir/orders.parquet")
     val k = col("o_orderkey")
     val dupK = when(k % 101 === 0, k + 1).otherwise(k)
     val srBase = (k * 7) % 5

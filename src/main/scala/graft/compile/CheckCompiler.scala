@@ -1,7 +1,8 @@
 package graft.compile
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.dsl._
 
@@ -144,21 +145,16 @@ object CheckCompiler {
     parts.reduceOption(_.unionByName(_)).getOrElse {
       // suite with no checks -> empty result with the violation schema
       val spark = df.sparkSession
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("clip_id",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("check_name",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("column_name",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("detail",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.LongType))))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ViolationSchema)
     }
   }
+
+  /** The schema of [[violationsWithBucket]]'s rows — the empty-suite
+    * fallback's, and the declared schema the Runner reads its violations
+    * dir with. */
+  val ViolationSchema: StructType = StructType(
+    Seq("clip_id", "check_name", "column_name", "detail").map(StructField(_, StringType)) :+
+      StructField("bucket", LongType))
 
   /** Duplicate groups an append FORMED OR GREW — the incremental-validation
     * analogue of [[Unique]]: global count over the narrow

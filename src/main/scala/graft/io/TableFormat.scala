@@ -4,8 +4,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Table-format seam (SURVEY.md §7.1 io/): the engine targets Iceberg-layout
   * tables, but no Iceberg jars ship in this sandbox, so this seam emulates
@@ -19,7 +20,11 @@ import org.apache.spark.sql.functions._
   *
   * Snapshot commits are atomic (temp + rename of the version hint), so a
   * reader always sees a complete snapshot — the property the Runner's
-  * resume manifest relies on. Swapping in real Iceberg replaces this object
+  * resume manifest relies on. As in the Iceberg spec, a snapshot is read
+  * with the schema its manifest records, never one inferred from its data
+  * files: every read goes through [[scan]], whose frame is built from
+  * manifests and directory listings alone and starts no Spark job before
+  * its first action. Swapping in real Iceberg replaces this object
   * with `spark.read.format("iceberg")` and catalog commits; no caller
   * changes.
   */
@@ -86,8 +91,7 @@ object TableFormat {
     * batch's own partition type — EXACT, no inference: a numeric-looking
     * STRING partition value ("00123") must round-trip verbatim, which
     * Spark's partition-type inference would destroy. */
-  private def decodePartValue(raw: String,
-      dt: org.apache.spark.sql.types.DataType): Any = {
+  private def decodePartValue(raw: String, dt: DataType): Any = {
     import org.apache.spark.sql.types._
     val unescaped = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(raw)
@@ -154,18 +158,13 @@ object TableFormat {
     * unsigned-lexicographic ordering, which is exactly Spark's UTF8 binary
     * collation and [[cmp]]'s comparison — the same order readWhere prunes
     * with. */
-  private def footerPartStats(dirPath: Path, pcol: String,
-      pdt: org.apache.spark.sql.types.DataType, statsCols: Seq[String],
-      schema: org.apache.spark.sql.types.StructType): Option[Seq[PartStats]] = {
+  private def footerPartStats(dirPath: Path, pcol: String, statsCols: Seq[String],
+      schema: StructType): Option[Seq[PartStats]] = {
     final case class Unavailable() extends RuntimeException
     try {
-      val subdirs = scala.util.Using.resource(Files.list(dirPath)) { s =>
-        s.iterator().asScala.filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(s"$pcol=")).toSeq
-      }
+      val subdirs = partSubdirs(dirPath, pcol, schema(pcol).dataType)
       if (subdirs.isEmpty) return None
-      Some(subdirs.map { sub =>
-        val pv = decodePartValue(sub.getFileName.toString.stripPrefix(s"$pcol="), pdt)
+      Some(subdirs.map { case (sub, pv) =>
         var rows = 0L
         val mins = scala.collection.mutable.Map.empty[String, Any]
         val maxs = scala.collection.mutable.Map.empty[String, Any]
@@ -213,19 +212,14 @@ object TableFormat {
   }
 
   /** Scan-based fallback for [[footerPartStats]]: one column-pruned Spark
-    * aggregation over the freshly written dir. Partition-type inference is
-    * disabled (lossy for numeric-looking string partition values); the
-    * raw dir-name string is cast to the batch's own partition type. */
-  private def scanPartStats(df: DataFrame, dirPath: Path, pcol: String,
-      statsCols: Seq[String]): Seq[PartStats] = {
-    val spark = df.sparkSession
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferPrev = spark.conf.get(inferKey)
-    spark.conf.set(inferKey, "false")
+    * aggregation over the freshly written dir, read through [[scan]] with
+    * the batch's own schema (the dir has no manifest yet), so partition
+    * values come back in the batch's own types. */
+  private def scanPartStats(df: DataFrame, table: String, dataPath: String,
+      pcol: String, statsCols: Seq[String]): Seq[PartStats] = {
     val statAggs = statsCols.flatMap(c =>
       Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
-    try spark.read.parquet(dirPath.toString)
-      .withColumn(pcol, col(pcol).cast(df.schema(pcol).dataType))
+    scan(df.sparkSession, table, Seq(dataPath), pcol, df.schema)((_, _) => false)
       .groupBy(col(pcol))
       .agg(count(lit(1)).as("n"), statAggs: _*)
       .collect()
@@ -235,56 +229,50 @@ object TableFormat {
             c -> ((Option(r.get(2 + 2 * i)), Option(r.get(3 + 2 * i))))
           }.toMap)
       }
-    finally spark.conf.set(inferKey, inferPrev)
   }
 
   private def writeSnapshot(df: DataFrame, table: String, partitionCol: String,
       carryForward: Boolean, statsCols: Seq[String] = Nil,
       overwrite: Boolean = false): Int = {
-    val prev = currentVersion(table)
-    val prevDirs =
-      if (carryForward) prev.map(v => dataDirs(table, v)).getOrElse(Seq.empty)
-      else Seq.empty
-    val prevExcludes: Map[String, Seq[Any]] =
-      if (carryForward) prev.map(v => dirExcludes(table, v)).getOrElse(Map.empty)
-      else Map.empty
+    val prevVersion = currentVersion(table)
+    // the carried snapshot's manifest, parsed once for every use below
+    val prev = if (carryForward) prevVersion.map(manifest(table, _)) else None
+    val prevDirs = prev.fold(Seq.empty[String])(_.dirs)
+    val prevExcludes = prev.fold(Map.empty[String, Seq[Any]])(_.excludes)
     // Additive schema evolution (the Iceberg add-column analogue): an
     // append/overwrite batch may ADD columns — readers fill pre-evolution
     // rows with null — but a batch MISSING columns the table already has,
     // CHANGING an existing column's type, or targeting a DIFFERENT
     // partition column is rejected loudly. All three are deferred-failure
     // bombs if allowed through: a missing column silently null-pads new
-    // data, a type change commits fine and then poisons every read at
-    // unionByName, and a mismatched partition column records dir_excludes
+    // data, a type change commits fine and then poisons every read of the
+    // older files, and a mismatched partition column records dir_excludes
     // values that an overwrite would apply to the WRONG column of the
     // carried dirs (silently deleting unrelated partitions). The checks
     // are manifest-vs-manifest (the snapshot records names and types),
     // no file IO.
-    if (carryForward) prev.foreach { v =>
-      val prevCols = tableColumns(table, v)
-      val missing = prevCols.filterNot(df.columns.toSet)
-      if (prevCols.nonEmpty && missing.nonEmpty) throw new IllegalArgumentException(
+    prev.foreach { m =>
+      val missing = m.schema.fieldNames.filterNot(df.columns.toSet)
+      if (missing.nonEmpty) throw new IllegalArgumentException(
         s"batch for $table is missing existing columns ${missing.mkString(", ")} — " +
           "schema evolution on this seam is additive only (drop columns via a " +
           "full-replace commit, which rewrites the lineage)")
-      val prevTypes = tableSchema(table, v)
       val dfTypes = df.schema.fields.map(f => f.name -> f.dataType.catalogString).toMap
-      val changed = prevTypes.collect {
+      val changed = m.schema.fields.map(f => (f.name, f.dataType.catalogString)).collect {
         case (c, t) if dfTypes.get(c).exists(_ != t) => s"$c: $t -> ${dfTypes(c)}"
       }
       if (changed.nonEmpty) throw new IllegalArgumentException(
         s"batch for $table changes existing column types (${changed.mkString("; ")}) — " +
           "a type change would commit fine and then fail every subsequent read " +
-          "at union time; rewrite the lineage with a full-replace commit instead")
-      snapPartitionCol(table, v).foreach { pc =>
-        if (pc != partitionCol) throw new IllegalArgumentException(
-          s"batch for $table targets partition column '$partitionCol' but the " +
-            s"table is partitioned by '$pc' — an overwrite would exclude " +
-            s"'$partitionCol' VALUES from dirs partitioned by '$pc', silently " +
-            "dropping unrelated partitions (repartition via a full-replace commit)")
-      }
+          "of the older files; rewrite the lineage with a full-replace commit instead")
+      val pc = m.partitionCol
+      if (pc != partitionCol) throw new IllegalArgumentException(
+        s"batch for $table targets partition column '$partitionCol' but the " +
+          s"table is partitioned by '$pc' — an overwrite would exclude " +
+          s"'$partitionCol' VALUES from dirs partitioned by '$pc', silently " +
+          "dropping unrelated partitions (repartition via a full-replace commit)")
     }
-    val version = prev.getOrElse(0) + 1
+    val version = prevVersion.getOrElse(0) + 1
     val dataPath = s"data/v$version"
 
     // WRITE FIRST, then derive the manifest's row counts and per-partition
@@ -314,17 +302,15 @@ object TableFormat {
       .write.mode("overwrite").partitionBy(partitionCol).parquet(s"$table/$dataPath")
     val dirPath = Paths.get(table, dataPath)
     // an empty batch writes only _SUCCESS (no partition subdirs): its
-    // fileless dir must not reach the manifest (it would fail schema
-    // inference and poison every read), so drop it and record no rows
+    // fileless dir holds nothing to read, so drop it and record no rows
     val hasData = scala.util.Using.resource(Files.list(dirPath)) { s =>
       s.iterator().asScala.exists(Files.isDirectory(_))
     }
     if (!hasData) Scratch.deleteRecursively(dirPath.toString)
     val partStats: Seq[PartStats] =
       if (!hasData) Seq.empty
-      else footerPartStats(dirPath, partitionCol,
-          df.schema(partitionCol).dataType, statsCols, df.schema)
-        .getOrElse(scanPartStats(df, dirPath, partitionCol, statsCols))
+      else footerPartStats(dirPath, partitionCol, statsCols, df.schema)
+        .getOrElse(scanPartStats(df, table, dataPath, partitionCol, statsCols))
     // An empty FULL-REPLACE is rejected loudly (round-7, per the round-6
     // advice): it used to commit a manifest with "data_dirs": [] and
     // atomically advance the version hint, after which every
@@ -362,34 +348,25 @@ object TableFormat {
     // SNAPSHOT records the table's stats CONTRACT — the union with the
     // carried manifest's, so one stat-less append can't make a later
     // compact() silently drop the stats every readWhere depends on
-    val contractStatsCols =
-      if (carryForward)
-        (prev.map(v => snapStatsCols(table, v)).getOrElse(Seq.empty) ++ statsCols).distinct
-      else statsCols
+    val contractStatsCols = (prev.fold(Seq.empty[String])(_.statsCols) ++ statsCols).distinct
     val statsColsJson = statsCols.map(jsonKey).mkString("[", ", ", "]")
     val contractStatsJson = contractStatsCols.map(jsonKey).mkString("[", ", ", "]")
-    val schemaJson = df.schema.fields
-      .map(f => s"${jsonKey(f.name)}: ${jsonKey(f.dataType.catalogString)}")
-      .mkString("{", ", ", "}")
     val excludesJson = newExcludes.filter(_._2.nonEmpty).map { case (d, vs) =>
       s"""${jsonKey(d)}: ${vs.map(jsonLit).mkString("[", ", ", "]")}"""
     }.mkString("{", ", ", "}")
-    // the snapshot's column names + types: the write-side evolution guard
-    // reads them manifest-to-manifest; an empty batch keeps the previous
-    // schema (it wrote no data to evolve anything with)
-    val (columnsJson, schemaJsonFinal) =
-      if (partStats.isEmpty) {
-        val cols = prev.map(v => tableColumns(table, v)).getOrElse(Seq.empty)
-        val types = prev.map(v => tableSchema(table, v)).getOrElse(Map.empty)
-        (cols.map(jsonKey).mkString("[", ", ", "]"),
-          cols.flatMap(c => types.get(c).map(t => s"${jsonKey(c)}: ${jsonKey(t)}"))
-            .mkString("{", ", ", "}"))
-      } else
-        (df.columns.toSeq.map(jsonKey).mkString("[", ", ", "]"), schemaJson)
+    // the snapshot's column names + types: every read of the snapshot takes
+    // them as its schema, and the write-side evolution guard compares them
+    // manifest-to-manifest; an empty batch keeps the previous schema (it
+    // wrote no data to evolve anything with)
+    val schema = if (partStats.isEmpty) prev.fold(df.schema)(_.schema) else df.schema
+    val columnsJson = schema.fieldNames.map(jsonKey).mkString("[", ", ", "]")
+    val schemaJson = schema.fields
+      .map(f => s"${jsonKey(f.name)}: ${jsonKey(f.dataType.catalogString)}")
+      .mkString("{", ", ", "}")
     val snap =
       s"""{"version": $version, "data_dirs": [$allDirs], "partition_col": "$partitionCol",
          | "stats_cols": $contractStatsJson, "dir_excludes": $excludesJson,
-         | "columns": $columnsJson, "schema": $schemaJsonFinal,
+         | "columns": $columnsJson, "schema": $schemaJson,
          | "partitions_added": [${counts.mkString(", ")}]}""".stripMargin
     Files.writeString(metaDir(table).resolve(s"snap-$version.json"), snap)
     // Per-DIR metadata (partition col + column stats), in its own file with
@@ -397,10 +374,8 @@ object TableFormat {
     // snapshot manifests are deleted by expireSnapshots while their data
     // dirs live on under retained snapshots, so dir-scoped metadata parked
     // in snap-<k>.json dies too early — an expired overwrite target then
-    // failed loudly ("carries exclusions but ... no partition_col") and
-    // stats pruning silently degraded to full scans. Readers prefer this
-    // file and fall back to the snap manifest for pre-existing tables;
-    // expiry deletes it only alongside its data dir.
+    // failed loudly and stats pruning silently degraded to full scans.
+    // Expiry deletes it only alongside its data dir.
     if (partStats.nonEmpty)
       Files.writeString(metaDir(table).resolve(s"dir-v$version.json"),
         s"""{"partition_col": "$partitionCol", "stats_cols": $statsColsJson,
@@ -412,22 +387,59 @@ object TableFormat {
     version
   }
 
-  /** Data dirs referenced by a snapshot's manifest (parsed with the
-    * engine's own strict JSON parser — dogfooding graft.repair.PyJson). */
-  def dataDirs(table: String, version: Int): Seq[String] = {
-    val snapFile = metaDir(table).resolve(s"snap-$version.json")
-    graft.repair.PyJson.loads(Files.readString(snapFile)) match {
-      case Some(graft.repair.JObj(f)) => f.get("data_dirs") match {
-        case Some(graft.repair.JArr(xs)) =>
-          xs.toSeq.collect { case graft.repair.JStr(s) => s }
-        case _ => f.get("data") match { // legacy single-dir snapshot
-          case Some(graft.repair.JStr(d)) => Seq(d)
-          case _ => Seq.empty
-        }
-      }
+  /** A snapshot manifest, parsed once: its data dirs, partition column,
+    * stats-column contract, per-dir exclusions, and the table schema —
+    * the read schema of every read of the snapshot, data columns in
+    * manifest order then the partition column (where Spark places a
+    * partition column even under a declared schema). Parsed with the
+    * engine's own strict JSON parser (dogfooding graft.repair.PyJson); an
+    * unparseable manifest parses to no dirs, which every reader refuses
+    * loudly. */
+  private final case class Manifest(dirs: Seq[String], partitionCol: String,
+      statsCols: Seq[String], excludes: Map[String, Seq[Any]], schema: StructType) {
+    /** Whether an [[overwritePartitions]] replaced partition value `pv` of
+      * `dir` — its rows there must not be read. */
+    def excluded(dir: String, pv: Any): Boolean =
+      excludes.get(dir).exists(_.exists(samePartValue(_, pv)))
+  }
+
+  private def manifest(table: String, version: Int): Manifest = {
+    import graft.repair.{JArr, JObj, JStr}
+    val f: collection.Map[String, graft.repair.JsonValue] = graft.repair.PyJson
+      .loads(Files.readString(metaDir(table).resolve(s"snap-$version.json"))) match {
+      case Some(JObj(fields)) => fields
+      case _ => Map.empty
+    }
+    def strings(field: String): Seq[String] = f.get(field) match {
+      case Some(JArr(xs)) => xs.toSeq.collect { case JStr(x) => x }
       case _ => Seq.empty
     }
+    val pcol = f.get("partition_col").collect { case JStr(c) => c }.getOrElse("")
+    val types = f.get("schema") match {
+      case Some(JObj(ts)) => ts.collect { case (c, JStr(t)) => c -> t }.toMap
+      case _ => Map.empty[String, String]
+    }
+    val (dataCols, partCol) = strings("columns").partition(_ != pcol)
+    Manifest(strings("data_dirs"), pcol, strings("stats_cols"),
+      f.get("dir_excludes") match {
+        case Some(JObj(ex)) => ex.collect { case (d, JArr(vs)) => d -> vs.toSeq.map(jsonScalar) }.toMap
+        case _ => Map.empty
+      },
+      StructType((dataCols ++ partCol).map(c => StructField(c, DataType.fromDDL(types(c))))))
   }
+
+  /** The manifest of `version` (the current snapshot by default); throws
+    * when there is none or it lists no data. */
+  private def snapshot(table: String, version: Option[Int]): Manifest = {
+    val v = version.orElse(currentVersion(table)).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot at $table"))
+    val m = manifest(table, v)
+    if (m.dirs.isEmpty) throw new IllegalStateException(s"snapshot $v at $table lists no data")
+    m
+  }
+
+  /** Data dirs referenced by a snapshot's manifest. */
+  def dataDirs(table: String, version: Int): Seq[String] = manifest(table, version).dirs
 
   /** Per-partition (partitionValue, min, max) bounds recorded for `colName`
     * by the snapshot that ADDED `dir` (dir names encode their writing
@@ -473,15 +485,14 @@ object TableFormat {
     * alone (no Spark job, no data IO): each data dir's `partitions_added`,
     * minus the values its `dir_excludes` replaced, summed over dirs.
     * Integral values come back as Long. Throws when a dir's metadata is
-    * gone (legacy layout), where only a scan could answer. */
+    * missing or unreadable, where only a scan could answer. */
   def partitionRows(table: String, version: Int): Map[Any, Long] = {
-    val excludes = dirExcludes(table, version)
-    dataDirs(table, version).flatMap { d =>
+    val m = manifest(table, version)
+    m.dirs.flatMap { d =>
       val (pc, parts) = dirMetaFields(table, d).flatMap(partitionsAdded).getOrElse(
         throw new IllegalStateException(s"dir $d at $table has no metadata listing its partitions"))
-      val excluded = excludes.getOrElse(d, Seq.empty).toSet
       parts.map(p => (p.get(pc).map(jsonScalar).orNull, p.get("rows")))
-        .filterNot(e => excluded(e._1)).map {
+        .filterNot(e => m.excluded(d, e._1)).map {
           case (pv, Some(graft.repair.JInt(n))) =>
             (pv match { case b: BigInt => b.toLong: Any; case other => other }) -> n.toLong
           case (pv, _) => throw new IllegalStateException(
@@ -493,68 +504,16 @@ object TableFormat {
   private val DirVersion = "data/v(\\d+)".r
 
   /** The metadata fields describing data dir `dir`: its own `dir-v<k>.json`
-    * (lifetime = the dir's, survives snapshot expiry) when present, else
-    * the writing snapshot's manifest (pre-dir-meta tables), else None
-    * (legacy single-dir layout, or both files expired). */
+    * (lifetime = the dir's, survives snapshot expiry — the writer adds a
+    * dir to a manifest only in the commit that writes this file); None
+    * when it is missing or unparseable. */
   private def dirMetaFields(table: String, dir: String)
-      : Option[Map[String, graft.repair.JsonValue]] = {
-    val ver = dir match {
-      case DirVersion(v) => v.toInt
-      case _ => return None
-    }
-    Seq(s"dir-v$ver.json", s"snap-$ver.json").iterator
-      .map(metaDir(table).resolve(_))
-      .filter(Files.exists(_))
-      .flatMap(p => graft.repair.PyJson.loads(Files.readString(p)) match {
-        case Some(graft.repair.JObj(f)) => Some(f.toMap)
-        case _ => None
-      })
-      .nextOption()
-  }
-
-  /** Column names recorded by snapshot `version`'s manifest (write-side
-    * evolution guard input). Empty for legacy manifests without the field
-    * — the guard then skips, never blocks. */
-  def tableColumns(table: String, version: Int): Seq[String] =
-    snapField(table, version, "columns") match {
-      case Some(graft.repair.JArr(cs)) =>
-        cs.toSeq.collect { case graft.repair.JStr(c) => c }
-      case _ => Seq.empty
-    }
-
-  /** Column name → catalog type recorded by snapshot `version`'s manifest
-    * (write-side type-evolution guard input). Empty for legacy manifests. */
-  def tableSchema(table: String, version: Int): Map[String, String] =
-    snapField(table, version, "schema") match {
-      case Some(graft.repair.JObj(f)) => f.collect {
-        case (c, graft.repair.JStr(t)) => c -> t
-      }.toMap
-      case _ => Map.empty
-    }
-
-  /** The partition column recorded by snapshot `version`'s manifest. */
-  def snapPartitionCol(table: String, version: Int): Option[String] =
-    snapField(table, version, "partition_col").collect {
-      case graft.repair.JStr(c) => c
-    }
-
-  /** The snapshot-level stats CONTRACT (union of every statsCols the
-    * lineage has carried — see the writeSnapshot note). */
-  def snapStatsCols(table: String, version: Int): Seq[String] =
-    snapField(table, version, "stats_cols") match {
-      case Some(graft.repair.JArr(cs)) =>
-        cs.toSeq.collect { case graft.repair.JStr(c) => c }
-      case _ => Seq.empty
-    }
-
-  private def snapField(table: String, version: Int, field: String)
-      : Option[graft.repair.JsonValue] = {
-    val snapFile = metaDir(table).resolve(s"snap-$version.json")
-    if (!Files.exists(snapFile)) return None
-    graft.repair.PyJson.loads(Files.readString(snapFile)) match {
-      case Some(graft.repair.JObj(f)) => f.get(field)
-      case _ => None
-    }
+      : Option[Map[String, graft.repair.JsonValue]] = dir match {
+    case DirVersion(v) =>
+      Some(metaDir(table).resolve(s"dir-v$v.json")).filter(Files.exists(_))
+        .flatMap(p => graft.repair.PyJson.loads(Files.readString(p)))
+        .collect { case graft.repair.JObj(f) => f.toMap }
+    case _ => None
   }
 
   /** JSON manifest scalar → JVM value (shared by the stats and excludes
@@ -570,85 +529,55 @@ object TableFormat {
   /** Partition values EXCLUDED per data dir by snapshot `version`'s manifest
     * — the read-side contract of [[overwritePartitions]]: rows of these
     * partition values in the named dirs were replaced by a later dir and
-    * must not be read. Missing/legacy field → no exclusions. */
-  def dirExcludes(table: String, version: Int): Map[String, Seq[Any]] = {
-    import graft.repair.{JArr, JObj}
-    snapField(table, version, "dir_excludes") match {
-      case Some(JObj(ex)) => ex.collect {
-        case (d, JArr(vs)) => d -> vs.toSeq.map(jsonScalar)
-      }.toMap
-      case _ => Map.empty
-    }
-  }
+    * must not be read. */
+  def dirExcludes(table: String, version: Int): Map[String, Seq[Any]] =
+    manifest(table, version).excludes
 
-  /** Keep-filter implementing a dir's exclusion list: a row survives unless
-    * its partition value is in `vals`. Null-safe in both directions — a
-    * null partition value is kept unless null itself was replaced, and an
-    * excluded value never drags null rows with it (bare `!isin` would: its
-    * null result is falsy under `where`). Exclusion values round-trip
-    * through the manifest as BigInt — folded to Long so the partition
-    * column's comparison stays numeric. */
-  private def excludeFilter(pcol: String, vals: Seq[Any])
-      : org.apache.spark.sql.Column = {
-    val hasNull = vals.contains(null)
-    val nonNull = vals.filter(_ != null).map {
-      case b: BigInt => b.toLong: Any
-      case other => other
+  /** The `pcol=` subdirs of a written data dir, each with its partition
+    * value decoded to type `pdt` by [[decodePartValue]]. */
+  private def partSubdirs(dirPath: Path, pcol: String, pdt: DataType): Seq[(Path, Any)] =
+    // Files.list holds a directory fd until closed — materialize inside
+    // Using so repeated snapshot reads on one long-lived JVM (the bench
+    // sweep) don't leak descriptors
+    scala.util.Using.resource(Files.list(dirPath)) { s =>
+      s.iterator().asScala
+        .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(s"$pcol="))
+        .map(p => p -> decodePartValue(p.getFileName.toString.stripPrefix(s"$pcol="), pdt))
+        .toSeq
     }
-    val keep =
-      if (nonNull.isEmpty) lit(true)
-      else coalesce(!col(pcol).isin(nonNull: _*), lit(true))
-    if (hasNull) keep && col(pcol).isNotNull else keep
-  }
 
-  /** One manifest dir of snapshot `version`, exclusions applied. Excluded
-    * partition subdirs are dropped at LISTING time (their files are never
-    * even enumerated, the readWhere economics), and the row-level
-    * keep-filter still applies as the correctness backstop for partition
-    * values whose on-disk subdir names Spark escapes differently than
-    * their toString (exotic chars) — a name miss then costs pruning, never
-    * rows. */
-  private def readDir(spark: SparkSession, table: String, dir: String,
-      excludes: Map[String, Seq[Any]]): DataFrame = {
-    val dirPath = Paths.get(table, dir)
-    excludes.get(dir) match {
-      case Some(vals) if vals.nonEmpty =>
-        val pc = dirPartitionCol(table, dir).getOrElse(
-          throw new IllegalStateException(
-            s"dir $dir at $table carries exclusions but its writing " +
-              "snapshot records no partition_col — cannot apply them"))
-        val excludedNames = vals.map {
-          case null => s"$pc=__HIVE_DEFAULT_PARTITION__"
-          case v => s"$pc=$v"
-        }.toSet
-        // Files.list streams hold a directory fd until closed — materialize
-        // inside Using so repeated snapshot reads on one long-lived JVM
-        // (the bench sweep) don't leak descriptors (round-6 advice)
-        val kept = scala.util.Using.resource(Files.list(dirPath)) { s =>
-          s.iterator().asScala
-            .filter(p => Files.isDirectory(p) &&
-              p.getFileName.toString.startsWith(s"$pc="))
-            .filterNot(p => excludedNames(p.getFileName.toString))
-            .toSeq
-        }
-        if (kept.isEmpty)
-          // every partition replaced: schema from the (excluded) files,
-          // zero rows
-          spark.read.parquet(dirPath.toString).where(lit(false))
-        else
-          spark.read.option("basePath", dirPath.toString)
-            .parquet(kept.map(_.toString): _*)
-            .where(excludeFilter(pc, vals))
-      case _ => spark.read.parquet(dirPath.toString)
-    }
-  }
+  /** The one snapshot reader: data dirs `dirs` of `table`, read with the
+    * declared `schema`, minus every partition subdir whose decoded value
+    * `drop(dir, value)` rejects. Values are decoded from the dir names
+    * with the writer's own [[decodePartValue]], so an escaped name can't
+    * miss and no row-level backstop is needed. A dir with nothing dropped
+    * is read from its root; one with nothing kept is not read at all; no
+    * dir left gives a local empty frame of `schema`. With the schema
+    * declared Spark infers nothing (no partition retyping, no footer
+    * job): building the frame lists files on the driver and starts no
+    * Spark job. Every branch shares `schema`, so a plain union joins them
+    * — one read per dir, each keeping its own partition pruning (a single
+    * multi-root read trips Spark's conflicting-directory-structures
+    * check). */
+  private def scan(spark: SparkSession, table: String, dirs: Seq[String], pcol: String,
+      schema: StructType)(drop: (String, Any) => Boolean): DataFrame =
+    dirs.flatMap { d =>
+      val dirPath = Paths.get(table, d)
+      val subdirs = partSubdirs(dirPath, pcol, schema(pcol).dataType)
+      val kept = subdirs.collect { case (p, pv) if !drop(d, pv) => p.toString }
+      val reader = spark.read.schema(schema)
+      if (kept.isEmpty) None
+      else if (kept.size == subdirs.size) Some(reader.parquet(dirPath.toString))
+      else Some(reader.option("basePath", dirPath.toString).parquet(kept: _*))
+    }.reduceOption(_ union _)
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), schema))
 
-  /** The partition column recorded for the writing of `dir` (dir-meta
-    * file first; snap manifest fallback — see [[dirMetaFields]]). */
-  private def dirPartitionCol(table: String, dir: String): Option[String] =
-    dirMetaFields(table, dir).flatMap(_.get("partition_col")).collect {
-      case graft.repair.JStr(c) => c
-    }
+  /** Partition-value equality across the manifest's JSON round trip, which
+    * returns integers as BigInt, decimals and floats as Double, and
+    * non-finite floats as strings: equal as numbers, or equal as written
+    * to the manifest. */
+  private def samePartValue(a: Any, b: Any): Boolean =
+    cmp(a, b).contains(0) || jsonLit(a) == jsonLit(b)
 
   /** Total order over manifest-stat scalars for pruning comparisons.
     * JSON round-trips numbers as BigInt/Double; callers pass Int/Long/
@@ -684,77 +613,29 @@ object TableFormat {
     * only the (data dir, partition value) pairs whose recorded
     * [min, max] bounds for `colName` intersect [lo, hi], then applies the
     * range predicate exactly (stats are necessary, not sufficient). The
-    * pruning is MANIFEST-side: a skipped dir is never listed, a skipped
-    * partition value becomes a partition-discovery filter — so at a
-    * 10^12-row table a clip-id range lookup over a range-laid-out table
-    * opens O(matching partitions) files, not O(table), before Spark's own
-    * parquet row-group pruning even starts. Dirs or partitions written
-    * without stats for `colName` are kept (correctness never depends on
-    * stats being present). */
+    * pruning is MANIFEST-side: a skipped dir is never listed and a skipped
+    * partition subdir is never read — so at a 10^12-row table a clip-id
+    * range lookup over a range-laid-out table opens O(matching partitions)
+    * files, not O(table), before Spark's own parquet row-group pruning
+    * even starts. Dirs written without stats for `colName` are kept
+    * (correctness never depends on stats being present). */
   def readWhere(spark: SparkSession, table: String, colName: String,
       lo: Any, hi: Any, version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(currentVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $table"))
-    val dirs = dataDirs(table, v)
-    if (dirs.isEmpty) throw new IllegalStateException(s"snapshot $v at $table lists no data")
-    val excludes = dirExcludes(table, v)
-    val rangeFilter = col(colName) >= lit(lo) && col(colName) <= lit(hi)
-    val reads = dirs.flatMap { d =>
-      dirStats(table, d, colName) match {
-        case None => Some(readDir(spark, table, d, excludes)) // no stats: keep all
-        case Some(parts) =>
-          // keep a partition unless it PROVABLY misses [lo, hi]: max < lo
-          // or min > hi with a defined comparison. An all-null partition
-          // (no bounds) has no row matching a range predicate → prunes;
-          // an uncomparable bound (type mismatch) → kept, never pruned.
-          val kept = parts.collect { case (pv, mn, mx)
-              if (mn.isDefined || mx.isDefined) &&
-                 !mx.flatMap(cmp(_, lo)).exists(_ < 0) &&
-                 !mn.flatMap(cmp(_, hi)).exists(_ > 0) => pv }
-          if (kept.isEmpty) None // whole dir skipped — never even listed
-          else if (kept.size == parts.size) Some(readDir(spark, table, d, excludes))
-          else {
-            // read ONLY the kept partition subdirs (basePath keeps the
-            // partition column in the schema): the skipped subdirs are
-            // never listed, so at 10^12 rows the lookup's file-listing
-            // cost is O(kept partitions), not O(table). Falls back to a
-            // partition-discovery isin filter if any kept value's subdir
-            // name can't be located verbatim (exotic chars Spark escapes
-            // in dir names), and to an unpruned read if the partition
-            // value set contains null (isin would wrongly drop it).
-            val pcol = dirPartitionCol(table, d)
-            val dirPath = Paths.get(table, d)
-            val subPaths = pcol.map(pc => kept.map(v => dirPath.resolve(s"$pc=$v")))
-            // exclusions compose with stats pruning: each branch below ends
-            // with the dir's exclusion keep-filter (on the partition column,
-            // so Spark partition pruning still applies), and the full-dir
-            // fallbacks go through readDir which does the same
-            val exclKeep = (pc: String) => excludes.get(d) match {
-              case Some(vals) if vals.nonEmpty => excludeFilter(pc, vals)
-              case _ => lit(true)
-            }
-            if (pcol.isEmpty || kept.contains(null))
-              Some(readDir(spark, table, d, excludes))
-            else if (subPaths.get.forall(Files.isDirectory(_)))
-              Some(spark.read.option("basePath", dirPath.toString)
-                .parquet(subPaths.get.map(_.toString): _*)
-                .where(exclKeep(pcol.get)))
-            else
-              Some(spark.read.parquet(s"$table/$d").where(col(pcol.get).isin(kept.map {
-                case b: BigInt => b.toLong: Any
-                case other => other
-              }: _*) && exclKeep(pcol.get)))
-          }
-      }
-    }
-    if (reads.isEmpty)
-      // every dir pruned: an empty frame with the table's schema, derived
-      // from the NEWEST dir only — its schema is a superset of every older
-      // dir's (the additive-evolution write guard enforces it), and listing
-      // one dir keeps the cheapest possible query (a no-match lookup) from
-      // paying the table-wide file listing a full read() would
-      spark.read.parquet(s"$table/${dirs.last}").where(lit(false))
-    else reads.reduce(_.unionByName(_, allowMissingColumns = true)).where(rangeFilter)
+    val m = snapshot(table, version)
+    // per dir with stats: the partition values that may meet [lo, hi] —
+    // all but those that PROVABLY miss it (max < lo or min > hi with a
+    // defined comparison). An all-null partition (no bounds) has no row
+    // matching a range predicate; an uncomparable bound is never pruned.
+    val mayMatch: Map[String, Seq[Any]] = m.dirs.flatMap(d =>
+      dirStats(table, d, colName).map(parts => d -> parts.collect {
+        case (pv, mn, mx) if (mn.isDefined || mx.isDefined) &&
+            !mx.flatMap(cmp(_, lo)).exists(_ < 0) &&
+            !mn.flatMap(cmp(_, hi)).exists(_ > 0) => pv
+      })).toMap
+    scan(spark, table, m.dirs.filterNot(mayMatch.get(_).exists(_.isEmpty)),
+        m.partitionCol, m.schema) { (d, pv) =>
+      m.excluded(d, pv) || mayMatch.get(d).exists(!_.exists(samePartValue(_, pv)))
+    }.where(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
   /** Roll the table back to `toVersion` — the Iceberg rollback analogue:
@@ -799,7 +680,7 @@ object TableFormat {
     val dir = metaDir(table)
     if (!Files.isDirectory(dir)) Seq.empty
     else scala.util.Using.resource(Files.list(dir)) { s =>
-      // same fd-lifetime discipline as readDir's listing (round-6 advice)
+      // same fd-lifetime discipline as partSubdirs' listing (round-6 advice)
       s.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
@@ -848,22 +729,13 @@ object TableFormat {
     * [[expireSnapshots]] to reclaim the superseded generations' bytes.
     * Returns the new snapshot version. */
   def compact(spark: SparkSession, table: String): Int = {
-    val v = currentVersion(table).getOrElse(throw new IllegalStateException(
-      s"no committed snapshot at $table"))
-    val partitionCol = snapPartitionCol(table, v).getOrElse(
-      throw new IllegalStateException(
-        s"snapshot manifest at $table lists no partition_col"))
-    // partition discovery re-types the partition column (a bigint bucket
-    // reads back as int); commit it as the manifest's recorded type, or
-    // every later append of the table's own schema is refused as a type change
-    val read0 = read(spark, table)
-    val current = tableSchema(table, v).get(partitionCol)
-      .fold(read0)(t => read0.withColumn(partitionCol, col(partitionCol).cast(t)))
+    val m = snapshot(table, None)
     // carry the column-stats CONTRACT through the rewrite (the manifest
     // records the union over the lineage, so a stat-less append can't
     // launder the stats away) — a compaction that dropped stats would turn
     // every subsequent readWhere into a full scan
-    commit(current, table, partitionCol, snapStatsCols(table, v))
+    commit(scan(spark, table, m.dirs, m.partitionCol, m.schema)(m.excluded),
+      table, m.partitionCol, m.statsCols)
   }
 
   /** Incremental scan (the Iceberg incremental-append-scan analogue): the
@@ -887,34 +759,28 @@ object TableFormat {
     if (before.isEmpty) throw new IllegalStateException(
       s"snapshot $fromVersion at $table lists no data dirs — refusing an " +
         "incremental scan whose base manifest is unreadable")
-    val dirs = dataDirs(table, toVersion).filterNot(before)
+    val m = manifest(table, toVersion)
+    val dirs = m.dirs.filterNot(before)
     if (dirs.isEmpty) throw new IllegalStateException(
       s"incremental scan $fromVersion->$toVersion at $table adds no data dirs")
     // toVersion's exclusions apply to the delta dirs too: a dir appended at
     // j in (from, to] may have had partitions replaced by a later overwrite
-    // in the same span — without the filter the delta would double-report
-    // the superseded rows (removed-row tracking is out of scope: an
+    // in the same span — without them the delta would double-report the
+    // superseded rows (removed-row tracking is out of scope: an
     // overwrite's "delta" is its replacement rows)
-    val excludes = dirExcludes(table, toVersion)
-    dirs.map(d => readDir(spark, table, d, excludes))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    scan(spark, table, dirs, m.partitionCol, m.schema)(m.excluded)
   }
 
   /** Read a snapshot (latest by default) — the union of every data dir in
-    * its manifest. Filters on the partition column prune at the directory
-    * level (Spark partition discovery). */
+    * its manifest, minus the partitions [[overwritePartitions]] replaced.
+    * The schema is the manifest's: data columns in manifest order, then
+    * the partition column, typed as written. On an evolved table a column
+    * added by a later append therefore comes before the partition column.
+    * Building the frame reads manifests and lists directories only; no
+    * Spark job starts before its first action. Filters on the partition
+    * column prune at the directory level (Spark partition discovery). */
   def read(spark: SparkSession, table: String, version: Option[Int] = None): DataFrame = {
-    val v = version.orElse(currentVersion(table)).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot at $table"))
-    val dirs = dataDirs(table, v)
-    if (dirs.isEmpty) throw new IllegalStateException(s"snapshot $v at $table lists no data")
-    // one partition-discovered read per manifest dir, unioned — each branch
-    // keeps its own PartitionFilters pruning (a single multi-root read
-    // trips Spark's conflicting-directory-structures check); per-dir
-    // exclusion filters implement overwritePartitions' replaced-rows
-    // semantics at the same partition-pruning level
-    val excludes = dirExcludes(table, v)
-    dirs.map(d => readDir(spark, table, d, excludes))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val m = snapshot(table, version)
+    scan(spark, table, m.dirs, m.partitionCol, m.schema)(m.excluded)
   }
 }

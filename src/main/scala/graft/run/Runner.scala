@@ -197,6 +197,6 @@ object Runner {
       rs.map(r => Row(r.bucket, r.nRows, r.nBad, r.pass)).asJava, VerdictSchema)
 
   def violations(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/violations")
+    spark.read.schema(CheckCompiler.ViolationSchema).parquet(s"$outDir/violations")
       .select("clip_id", "check_name", "column_name", "detail")
 }

@@ -98,8 +98,8 @@ class TableFormatSpec extends AnyFunSuite {
     TableFormat.commit(clips.filter(col("ord") % 3 === 0), table, "bucket")
     TableFormat.append(clips.filter(col("ord") % 3 === 1), table, "bucket")
     TableFormat.compact(spark, table)
-    // partition discovery reads bucket back as int; the compacted snapshot
-    // must still record bigint so the table's own rows append
+    // the compacted snapshot must still record bigint (the manifest's
+    // declared type, which every read takes) so the table's own rows append
     TableFormat.append(clips.filter(col("ord") % 3 === 2), table, "bucket")
     val got = TableFormat.read(spark, table).select("clip_id", "ord", "bucket")
     assert(got.count() == clips.count())
@@ -431,5 +431,66 @@ class TableFormatSpec extends AnyFunSuite {
     val out = TableFormat.readWhere(spark, table, "ord", -100L, -1L)
     assert(out.count() == 0)
     assert(out.columns.toSeq == TableFormat.read(spark, table).columns.toSeq)
+  }
+
+  test("reads take the manifest schema: no Spark job before an action, every partition value kept") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-declared").toString
+    // "00123" would infer as int 123; Spark escapes "a/b=c %d" in its dir name
+    val odd = "a/b=c %d"
+    val base = Seq((1L, "00123"), (2L, odd), (3L, "p"), (4L, null: String), (5L, odd))
+      .toDF("id", "grp")
+    val v1 = TableFormat.commit(base, table, "grp", statsCols = Seq("id"))
+    val delta = Seq((6L, "00123"), (7L, "00123")).toDF("id", "grp")
+    val v2 = TableFormat.append(delta, table, "grp", statsCols = Seq("id"))
+
+    // building the frames reads manifests and lists dirs only: no Spark
+    // job starts before the marker job
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (all, incr, where) = try {
+      val frames = (TableFormat.read(spark, table),
+        TableFormat.readIncremental(spark, table, v1, v2),
+        TableFormat.readWhere(spark, table, "id", 2L, 6L))
+      sc.setJobGroup("after-build", "marker")
+      spark.range(4).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobGroups.contains("after-build") && System.nanoTime() < deadline) Thread.sleep(20)
+      frames
+    } finally sc.removeSparkListener(listener)
+    assert(jobGroups.contains("after-build"), "marker job never reached the listener")
+    val beforeMarker = jobGroups.asScala.takeWhile(_ != "after-build").toSeq
+    assert(beforeMarker.isEmpty, s"building three reads ran ${beforeMarker.size} Spark jobs")
+
+    // values round-trip exactly, with the session's partition-type
+    // inference left at its default (on)
+    assert(spark.conf.get("spark.sql.sources.partitionColumnTypeInference.enabled") == "true")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "grp").as[(Long, String)].collect().toSet
+    val expected = base.unionByName(delta)
+    assert(all.schema("grp").dataType == org.apache.spark.sql.types.StringType)
+    assert(rows(all) == rows(expected))
+    assert(rows(incr) == rows(delta))
+    assert(rows(where) == rows(expected.filter(col("id").between(2L, 6L))))
+
+    // overwriting the escaped and the numeric-looking value replaces
+    // exactly their rows, and never opens their replaced subdirs
+    val fix = Seq((8L, odd), (9L, "00123")).toDF("id", "grp")
+    TableFormat.overwritePartitions(fix, table, "grp", statsCols = Seq("id"))
+    val fixed = expected.filter(col("grp").isNull || !col("grp").isin(odd, "00123")).unionByName(fix)
+    val got = TableFormat.read(spark, table)
+    assert(rows(got) == rows(fixed) && got.count() == fixed.count())
+    assert(got.inputFiles.filter(f => f.contains("/v1/") || f.contains("/v2/")).forall(f =>
+      f.contains("/grp=p/") || f.contains("/grp=__HIVE_DEFAULT_PARTITION__/")),
+      got.inputFiles.mkString(", "))
+    // a stats-pruned range read over the result equals a direct filter
+    assert(rows(TableFormat.readWhere(spark, table, "id", 2L, 8L)) ==
+      rows(fixed.filter(col("id").between(2L, 8L))))
   }
 }
