@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *                        reference `_finalize_object`, parse_object.py:22-24)
   *   - ord % 113 == 0  -> transcript ''   (empty value; parse_object.py:281-287)
   *   - ord % 131 == 0  -> clip_id withheld from the refs table (referential
-  *                        integrity anti-join must surface exactly these)
+  *                        integrity check must surface exactly these)
   * Audio-only injections (Spark side, see graft.audio): ord % 149 == 0 ->
   * SNR below 30 dB; ord % 157 == 0 -> bytes-implied duration mismatch.
   */

@@ -8,8 +8,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Catalyst `Column` expressions so Catalyst/Tungsten pick the physical plan.
   *
   * Row-level checks compile to a single narrow projection (no shuffle);
-  * dataset-level checks ([[Unique]], [[RefIntegrity]]) compile to hash
-  * aggregates / anti-joins on the key.
+  * dataset-level checks ([[Unique]], [[RefIntegrity]]) compile to a hash
+  * aggregate on the key / a presence left join against the ref keys.
+  * Their NULL semantics are stated once, in CheckCompiler's scaladoc.
   */
 sealed trait Check {
   /** Stable name recorded in violation rows (the reference's repair-log
@@ -85,8 +86,9 @@ final case class Unique(column: String) extends Check {
 }
 
 /** Referential integrity key→refTable — reference required-property semantics
-  * lifted to dataset level; compiles to a LEFT ANTI join (broadcast when the
-  * ref side is small, sort-merge otherwise — Catalyst + AQE decide). */
+  * lifted to dataset level; compiles to a presence LEFT join against the
+  * distinct ref keys (broadcast when the ref side is small, sort-merge
+  * otherwise — Catalyst + AQE decide). */
 final case class RefIntegrity(column: String, refName: String) extends Check {
   val name = s"ref_${column}_$refName"
 }

@@ -25,10 +25,11 @@ import graft.dsl.CheckSuite
   *     atomicity; the Iceberg binding would replace this with snapshot
   *     commits — SURVEY.md §7.5);
   *   - each batch hash-partitions its input on the bucket column (north
-  *     rule: explicit partitioning), so the input is derived in one pass,
-  *     the verdict aggregate needs no further exchange, the verdict plan
-  *     runs once (its rows are collected into the manifest), and each
-  *     violations bucket dir gets one file.
+  *     rule: explicit partitioning) and caches the suite's checked rows
+  *     ([[CheckCompiler.checkedRows]]), so the input is derived in one
+  *     pass, the verdict collect is one aggregate over the cache with no
+  *     exchange, and each bucket's row and ref violations land in one
+  *     file.
   *
   * This is the engine analogue of the reference's file-position resume
   * (`load()` from fd.tell(), json_repair.py:265-299): prior content
@@ -89,7 +90,10 @@ object Runner {
     * lineage the global duplicate aggregate still needs (uniqueness reads
     * only (key, bucket), so this scan is narrow columnar IO, not the wide
     * derivation). The pair turns resume cost from O(full input) into
-    * O(cheap full scan + remaining fraction of the expensive pass). */
+    * O(cheap full scan + remaining fraction of the expensive pass).
+    * Without `globalInput` the duplicate aggregate reads `df`, so a caller
+    * whose `df` is expensive to derive should pass its cheap lineage here
+    * even when it does not scope. */
   def run(
       spark: SparkSession,
       df: DataFrame,
@@ -119,13 +123,13 @@ object Runner {
     // the bucket column (north rule): it samples nothing, so the input
     // lineage — which may embed the expensive fused synth pass — runs once,
     // and each bucket lands in one partition, the key of the verdict
-    // aggregate and of the per-bucket violations write. Persisted because the
-    // violations write and the verdict collect both read it. The frame is
-    // NARROW (metadata + audio measurements, no bytes), so at 10^12 rows
-    // this is a disk-spillable cache of the cheap columns, not the audio
-    // payload.
+    // aggregate and of the per-bucket violations write. What is persisted is
+    // the suite's checked rows (bucket, bad flag, violation structs — no
+    // input column): the violations write explodes them, and the verdict
+    // collect is one aggregate over them that reads nothing else.
     val batchInput = scopedInput.map(f => f(todo)).getOrElse(df)
     val input = batchInput.repartition(totalBuckets, col(suite.bucketColumn))
+    val checked = CheckCompiler.checkedRows(input, suite, Some(todo), globalInput)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // outputs are keyed PER BUCKET (dynamic partition overwrite): a retry
@@ -135,14 +139,13 @@ object Runner {
     // the Iceberg binding would replace this with snapshot commits.
     val batchId = todo.mkString("-").hashCode.toHexString
     // unpersist in finally: a throw from the write or the collect must not
-    // leak the cached narrow frame for the rest of the session
+    // leak the cached rows for the rest of the session
     val rows = try {
-      CheckCompiler.violationsWithBucket(input, suite, Some(todo), globalInput)
+      CheckCompiler.violationsOf(checked, suite, Some(todo), globalInput.getOrElse(df))
         .write.mode("overwrite").options(Map("partitionOverwriteMode" -> "dynamic"))
         .partitionBy("bucket").parquet(s"$outDir/violations")
-      // one row per bucket: the verdict plan runs once
-      CheckCompiler.verdicts(input, suite, Some(todo), globalInput).collect()
-    } finally input.unpersist(false)
+      CheckCompiler.verdictsOf(checked).collect()
+    } finally checked.unpersist(false)
     val byBucket = rows.map(r =>
       r.getLong(0) -> BucketResult(r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     // buckets with zero input rows still complete (empty result)

@@ -112,9 +112,9 @@ object ValidationPipeline {
     * NARROW flagged rows when anomalies scale with the data — this
     * generator's refs-absent keys are ~1/131 of all clips, which at 10^12
     * rows is far past any broadcast cap. Either way the wide exchanges
-    * carry bits, never audio. (The generic CheckCompiler path keeps the
-    * anti-join for arbitrary ref tables; equivalence is asserted in
-    * EngineSpec.) */
+    * carry bits, never audio. (The generic CheckCompiler path joins an
+    * arbitrary ref table with a presence left join; equivalence is
+    * asserted in EngineSpec.) */
   def verdicts(spark: SparkSession, sfDir: String, replicate: Int = 1): DataFrame = {
     import spark.implicits._
     val meta = synthInput(spark, sfDir, replicate)

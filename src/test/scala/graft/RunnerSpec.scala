@@ -154,6 +154,29 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
+  test("Runner.run leaves no cached frame behind, after success and after a failed write") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.dsl._
+    val df = (0 until 40).map(i => (f"c${i % 30}%03d", i.toLong % 4, i.toLong))
+      .toDF("clip_id", "bucket", "ord")
+    val suite = CheckSuite("clip_id", "bucket", Seq(Unique("clip_id"),
+      RowExpr("ord_odd", "ord", col("ord") % 2 === 1, col("ord").cast("string"))), Map.empty)
+    val cacheManager = spark.sharedState.cacheManager
+    // frames other suites in this session cached are not this test's subject
+    spark.catalog.clearCache()
+    val ok = Files.createTempDirectory("graft-runner-cache-ok").toString
+    Runner.run(spark, df, suite, ok, totalBuckets = 4)
+    assert(Runner.completedBuckets(ok).size == 4)
+    assert(cacheManager.isEmpty, "a successful run left a cached frame")
+    // a regular file where the violations dir goes: the write throws
+    val bad = Files.createTempDirectory("graft-runner-cache-fail").toString
+    Files.writeString(java.nio.file.Paths.get(bad, "violations"), "not a dir")
+    intercept[Exception](Runner.run(spark, df, suite, bad, totalBuckets = 4))
+    assert(Runner.completedBuckets(bad).isEmpty)
+    assert(cacheManager.isEmpty, "a failed run left a cached frame")
+  }
+
   test("verdict records agree on an empty bucket; an in-sync snapshot sync runs no Spark job") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
