@@ -408,7 +408,7 @@ object Bench {
       if (scalingOnly) None
       else Some {
         spark = newSession(nHi)
-        val suite = ValidationPipeline.fullSuite(spark, sfDir)
+        val suite = ValidationPipeline.fullSuite(spark, sfDir, repl)
         val globalIn = ValidationPipeline.replicatedBase(spark, sfDir, repl)
         def timedRun(outDir: String, maxB: Int): (Double, Int) = {
           val t0 = System.nanoTime()

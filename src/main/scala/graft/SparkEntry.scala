@@ -19,8 +19,8 @@ object SparkEntry {
     ClipQueries.verdicts(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // the headline benchmark pipeline itself (metadata + audio invariants
-    // fused into one pass), driver-oracled at replicate=1
+    // the headline benchmark pipeline itself (the declarative metadata +
+    // audio suite over one fused synth pass), oracle-checked at replicate=1
     "vc_full_verdicts" -> ((s: SparkSession, d: String) =>
       graft.run.ValidationPipeline.verdicts(s, d)),
     "vc_violations" -> ((s, d) => ClipQueries.violations(s, d)),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.clips.ClipsTable
+import graft.dsl.RowExpr
 
 /** Clip metadata row (no bytes) — the narrow projection the planner prunes
   * the parquet scan to. */
@@ -42,6 +43,17 @@ object AudioQueries {
 
   val SnrThresholdDb = 30.0
   val FrameMs = 20
+
+  /** The two audio invariants as row checks over the measured columns
+    * (`snr_db`, `n_samples`, `sr_hz`, `dur_ms`): the one statement of each,
+    * read by [[snrViolations]], [[durMismatch]] and the full declarative
+    * suite (`ValidationPipeline.fullSuite`). */
+  val SnrCheck: RowExpr = RowExpr("audio_snr_min", "snr_db",
+    col("snr_db").isNaN || col("snr_db") < lit(SnrThresholdDb),
+    round(col("snr_db"), 1).cast("string"))
+  val DurCheck: RowExpr = RowExpr("audio_dur_consistency", "n_samples",
+    col("n_samples") =!= expr("CAST(sr_hz AS BIGINT) * dur_ms DIV 1000"),
+    col("n_samples").cast("string"))
 
   /** Numeric seed recoverable from the clip id ("clip-%012d"). */
   def seedOf(clipId: String): Long = clipId.substring(5).toLong
@@ -146,7 +158,7 @@ object AudioQueries {
     * clean resynth). Oracle: exactly the ord % 149 == 0 rows. */
   def snrViolations(spark: SparkSession, sfDir: String): DataFrame =
     measuredShared(spark, sfDir).toDF()
-      .filter(col("snr_db").isNaN || col("snr_db") < SnrThresholdDb)
+      .filter(SnrCheck.failWhen)
       .select("clip_id")
 
   /** Rows whose byte length disagrees with the declared dur_ms; emits the
@@ -154,7 +166,7 @@ object AudioQueries {
     * n_samples = floor(sr_hz * (dur_ms + 7) / 1000). */
   def durMismatch(spark: SparkSession, sfDir: String): DataFrame =
     measuredShared(spark, sfDir).toDF()
-      .filter(col("n_samples") =!= expr("CAST(sr_hz AS BIGINT) * dur_ms DIV 1000"))
+      .filter(DurCheck.failWhen)
       .select("clip_id", "dur_ms", "n_samples")
 
   /** Frame count per clip (20 ms non-overlapping frames) — deterministic,

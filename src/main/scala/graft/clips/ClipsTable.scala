@@ -64,10 +64,14 @@ object ClipsTable {
       (k % NumBuckets).as("bucket"))
   }
 
-  /** Distinct reference ids for the clip→transcript referential-integrity
-    * check; rows ord % 131 == 0 deliberately withheld. */
-  def refs(spark: SparkSession, sfDir: String): DataFrame =
-    base(spark, sfDir).filter(col("ord") % 131 =!= 0).select(col("clip_id")).distinct()
+  /** Distinct reference ids of a clips-shaped frame for the
+    * clip→transcript referential-integrity check; rows ord % 131 == 0
+    * deliberately withheld. */
+  def refs(clips: DataFrame): DataFrame =
+    clips.filter(col("ord") % 131 =!= 0).select(col("clip_id")).distinct()
+
+  /** [[refs]] of the [[base]] clips table. */
+  def refs(spark: SparkSession, sfDir: String): DataFrame = refs(base(spark, sfDir))
 
   /** DuckDB CTE mirroring [[base]] exactly (no bytes). Prepend to oracle SQL. */
   val cte: String =

@@ -16,7 +16,9 @@ import graft.dsl._
   * same ref joins and the same duplicate aggregate.
   *
   * Semantics, the same on every path that goes through here (batch
-  * queries, the Runner's scoped resume, `vc_incr`, verdict drift):
+  * queries, the headline `ValidationPipeline.verdicts` and with it
+  * `graft.Bench`'s clips/s, the Runner's scoped resume, `vc_incr`,
+  * verdict drift):
   *   - a row check fires where its `failWhen` is TRUE; a NULL predicate
   *     does not fire;
   *   - [[Unique]]: a row is bad when its key occurs more than once in the

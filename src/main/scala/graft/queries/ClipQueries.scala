@@ -422,20 +422,6 @@ object ClipQueries {
     // Each filtered set is EXACTLY what the corresponding per-scope
     // aggregate emitted (IncrementalSpec pins the decomposition against the
     // direct recompute; the driver oracle replays the direct formulation).
-    // ONLY the filtered group table is persisted for the three verdict
-    // computations that consume it (released by the session owner's
-    // clearCache between queries). Its logical plan is unique to this
-    // query, which matters: Spark's CacheManager substitutes a cached
-    // relation into ANY later query whose canonicalized plan matches, so
-    // persisting a frame other queries also build (refs, the clips base)
-    // would silently rewrite THEIR plans for the rest of the session —
-    // measured as EngineSpec's scan-count assertions breaking when a
-    // suite-shared session ran verdictDrift first. v1/delta are likewise
-    // NOT persisted: each consumer's parquet scan is column-pruned to
-    // exactly what it needs (the narrow key scan for the group aggregate,
-    // the wide checked columns for the verdict passes), and a full-width
-    // cache would defeat that pruning — at 10^12 rows the pruned columnar
-    // re-read is the cheap option by construction.
     val s = suite(spark, sfDir)
     val v1 = TableFormat.read(spark, table, Some(1))
       .withColumn("bucket", col("bucket").cast("long"))
@@ -447,7 +433,6 @@ object ClipQueries {
       .agg(count(lit(1)).as("cnt"),
         count(when(col("__new") === 0, lit(1))).as("cnt_old"))
       .filter(col("cnt") > 1)
-      .persist()
     val before = CheckCompiler.verdicts(v1, s,
         dupKeys = Map("clip_id" -> grouped.filter(col("cnt_old") >= 2).select("clip_id")))
       .select(col("bucket"), col("n_bad").as("n_bad_before"))
@@ -474,11 +459,6 @@ object ClipQueries {
       v1.join(flippedGroups,
         v1("clip_id") <=> flippedGroups("clip_id"), "left_semi"), noUnique)
       .select(col("bucket"), (col("n_rows") - col("n_bad")).as("n_retro"))
-    // the persisted group frame is keyspace-bounded and released by the
-    // session owner's clearCache between queries (the Bench/Verify
-    // cache-lifecycle contract) — an eager materialize-then-unpersist here
-    // would cost extra actions per invocation just to drop what the owner
-    // drops anyway
     before
       .join(deltaBad, Seq("bucket"), "full_outer")
       .join(retro, Seq("bucket"), "full_outer")
@@ -500,7 +480,7 @@ object ClipQueries {
          |UNION ALL SELECT clip_id, 'enum_codec', 'codec', codec FROM clips WHERE codec NOT IN ('pcm_s16le','flac','opus','mp3')
          |UNION ALL SELECT clip_id, 'unique_clip_id', 'clip_id', cast(cnt AS VARCHAR) FROM (SELECT clip_id, count(*) AS cnt FROM clips GROUP BY clip_id HAVING count(*) > 1) d
          |UNION ALL SELECT c.clip_id, 'ref_clip_id_refs', 'clip_id', 'missing_ref' FROM clips c WHERE NOT EXISTS (SELECT 1 FROM refs r WHERE r.clip_id = c.clip_id)""".stripMargin,
-    // the full fused pipeline: metadata checks + the two audio invariants
+    // the headline pipeline: metadata checks + the two audio invariants
     // (SNR < 30dB at ord%149, byte/dur mismatch at ord%157) + global
     // uniqueness + referential presence, aggregated per bucket
     "vc_full_verdicts" ->

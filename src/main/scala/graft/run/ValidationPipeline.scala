@@ -5,13 +5,18 @@ import org.apache.spark.sql.functions._
 
 import graft.audio.{AudioQueries, ClipMeta}
 import graft.clips.ClipsTable
+import graft.compile.CheckCompiler
+import graft.dsl.CheckSuite
+import graft.queries.ClipQueries
 
 /** The full end-to-end validation job — the engine's headline workload and
-  * the unit of the "validated clips/sec" metric (BASELINE.json): synthesize/
-  * decode audio, evaluate the PCM SNR>=30dB allclose invariant and the
-  * byte-length/dur_ms consistency invariant per row, fuse them with the
-  * declarative metadata checks (null/empty/range/enum), global clip_id
-  * uniqueness and referential integrity, and aggregate per-bucket verdicts.
+  * the unit of the "validated clips/sec" metric (BASELINE.json): one fused
+  * synth/decode pass measures each clip's SNR and sample count
+  * ([[augmented]]), and the declarative [[fullSuite]] (metadata checks,
+  * the PCM SNR>=30dB allclose and byte-length/dur_ms invariants, global
+  * clip_id uniqueness, referential integrity) is compiled over it into
+  * per-bucket verdicts by [[graft.compile.CheckCompiler]], the same plan
+  * the Runner executes bucket by bucket.
   */
 object ValidationPipeline {
 
@@ -24,10 +29,10 @@ object ValidationPipeline {
     replicate(spark, ClipsTable.base(spark, sfDir), k)
 
   /** [[replicatedBase]] split to the synth task granularity — the input of
-    * the fused synth pass in [[verdicts]] and [[augmented]]. Cheap
-    * metadata-only lineages (the anomaly aggregate, a Runner's
-    * `globalInput`) read [[replicatedBase]] instead, which would otherwise
-    * pay this exchange only to re-shuffle by key. */
+    * the fused synth pass in [[augmented]]. Cheap metadata-only lineages
+    * (the uniqueness aggregate, the refs, a Runner's `globalInput`) read
+    * [[replicatedBase]] instead, which would otherwise pay this exchange
+    * only to re-shuffle by key. */
   private def synthInput(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
     // repartition the BASE (1/k of the rows) before the broadcast fan-out:
     // the replicated rows inherit the partitioning, so the synth stage gets
@@ -97,70 +102,14 @@ object ValidationPipeline {
   def synthPartitions(rows: Long): Int =
     math.max(64, math.min(4096, math.ceil(rows.toDouble / RowsPerSynthTask).toInt))
 
-  /** Per-bucket verdicts of the complete suite (metadata + audio).
-    *
-    * The global checks are specialized here: uniqueness and referential
-    * presence (refs is by construction the `ord % 131 != 0` projection of
-    * the same table) are both per-clip_id aggregates of the cheap METADATA
-    * — so they are computed by one hash aggregate over the narrow metadata
-    * scan (map-side partial combine: a 10^9-row hot duplicate costs one row
-    * per task — no window, no single-task hot-spot; see EngineSpec's 10^5×
-    * skewed-dup plan case), filtered to the anomalous keys, and joined
-    * back. The join is deliberately unhinted: AQE broadcasts the anomaly
-    * side when it is small at runtime (the expensive synth stream then
-    * never shuffles), and falls back to a skew-split shuffled join of the
-    * NARROW flagged rows when anomalies scale with the data — this
-    * generator's refs-absent keys are ~1/131 of all clips, which at 10^12
-    * rows is far past any broadcast cap. Either way the wide exchanges
-    * carry bits, never audio. (The generic CheckCompiler path joins an
-    * arbitrary ref table with a presence left join; equivalence is
-    * asserted in EngineSpec.) */
-  def verdicts(spark: SparkSession, sfDir: String, replicate: Int = 1): DataFrame = {
-    import spark.implicits._
-    val meta = synthInput(spark, sfDir, replicate)
-    // One fused typed pass per row: synthesize into a task-reused buffer,
-    // decode+SNR in a single allocation-free sweep, fold in the metadata
-    // checks — so (a) the 30 KB bytes column never round-trips the encoder
-    // between stages, (b) per-row garbage is ~zero (GC stalls otherwise eat
-    // the 32-thread level's headroom and sink N->4N scaling efficiency),
-    // and (c) only four narrow columns enter the clip_id shuffle — at
-    // 10^12 rows the exchange carries bits, not audio.
-    val flagged = meta // already split to synth granularity by synthInput
-      .as[ClipMeta]
-      .mapPartitions(AudioQueries.synthRows(_) { (m, r, _) =>
-        val durBad = r.nSamples != m.sr_hz.toLong * m.dur_ms / 1000L
-        val snrBad = r.snrDb.isNaN || r.snrDb < AudioQueries.SnrThresholdDb
-        val rowBad = m.transcript.isEmpty || m.transcript.contains("") ||
-          m.sr_hz < ClipsTable.SrMin || m.sr_hz > ClipsTable.SrMax ||
-          !ClipsTable.CodecEnum.contains(m.codec) ||
-          snrBad || durBad
-        (m.clip_id, m.ord, m.bucket, rowBad)
-      }).toDF("clip_id", "ord", "bucket", "row_bad")
-
-    // anomalous clip_ids (duplicated or absent from refs) from the cheap
-    // metadata only — the synth stream above is consumed exactly once.
-    // No broadcast hint: the refs-absent keys are ~1/131 of ALL clips by
-    // construction, i.e. they scale linearly with the data (7.6e9 keys at
-    // the 10^12-row target — far past the broadcast cap), so the join must
-    // be allowed to fall back to a shuffled join of NARROW rows; AQE
-    // converts it to broadcast at runtime whenever the anomaly side is
-    // actually small, and skew-splits the probe side when it is not.
-    val anomalies = replicatedBase(spark, sfDir, replicate).select("clip_id", "ord")
-      .groupBy("clip_id")
-      .agg(count(lit(1)).as("__cnt"),
-        max(when(col("ord") % 131 =!= 0, 1).otherwise(0)).as("__present"))
-      .filter(col("__cnt") > 1 || col("__present") === 0)
-      .select(col("clip_id"), lit(true).as("__anomaly"))
-    flagged
-      .join(anomalies, Seq("clip_id"), "left")
-      .withColumn("__bad", col("row_bad") || col("__anomaly").isNotNull)
-      .groupBy(col("bucket").as("bucket"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        count(when(col("__bad"), lit(1))).as("n_bad"))
-      .withColumn("pass", col("n_bad") === 0)
-      .select("bucket", "n_rows", "n_bad", "pass")
-  }
+  /** Per-bucket verdicts of the complete suite (metadata + audio): the
+    * declarative [[fullSuite]] over [[augmented]], through the same
+    * [[graft.compile.CheckCompiler]] lowering the Runner and `SubmitJob`
+    * run. Uniqueness counts keys over the cheap [[replicatedBase]]
+    * metadata lineage, so the synth stream is consumed exactly once. */
+  def verdicts(spark: SparkSession, sfDir: String, replicate: Int = 1): DataFrame =
+    CheckCompiler.verdicts(augmented(spark, sfDir, replicate), fullSuite(spark, sfDir, replicate),
+      globalDf = Some(replicatedBase(spark, sfDir, replicate)))
 
   /** Clips augmented with the per-row audio measurements (snr_db,
     * n_samples) from the same fused allocation-free pass — the bridge that
@@ -185,21 +134,13 @@ object ValidationPipeline {
         "snr_db", "n_samples")
   }
 
-  /** The complete declarative suite over [[augmented]]: the metadata checks
-    * plus the two audio invariants as RowExpr checks. Equivalence with the
-    * fused [[verdicts]] plan is asserted in EngineSpec. */
-  def fullSuite(spark: SparkSession, sfDir: String): graft.dsl.CheckSuite = {
-    import graft.dsl._
-    import Check.colResolver
-    val base = graft.queries.ClipQueries.suite(spark, sfDir)
-    base.copy(checks = base.checks ++ Seq(
-      RowExpr("audio_snr_min", "snr_db",
-        col("snr_db").isNaN || col("snr_db") < lit(AudioQueries.SnrThresholdDb),
-        org.apache.spark.sql.functions.round(col("snr_db"), 1).cast("string")),
-      RowExpr("audio_dur_consistency", "n_samples",
-        col("n_samples") =!= org.apache.spark.sql.functions
-          .expr("CAST(sr_hz AS BIGINT) * dur_ms DIV 1000"),
-        col("n_samples").cast("string"))))
+  /** The complete declarative suite over [[augmented]] with the same
+    * `replicate`: the metadata checks of `ClipQueries.suite`, with refs
+    * derived from the same replicated base, plus the two audio invariants. */
+  def fullSuite(spark: SparkSession, sfDir: String, replicate: Int = 1): CheckSuite = {
+    val base = ClipQueries.suite(spark, sfDir)
+    base.copy(checks = base.checks ++ Seq(AudioQueries.SnrCheck, AudioQueries.DurCheck),
+      refs = Map("refs" -> ClipsTable.refs(replicatedBase(spark, sfDir, replicate))))
   }
 
   /** Runs the pipeline to completion; returns (nClips, nBadRows, seconds). */

@@ -175,40 +175,16 @@ object StreamingValidation {
       prefix: String, mode: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val nm = s"${prefix}_${sinkId.incrementAndGet()}"
-    val run = () => {
-      val q = windowedVerdicts(spark, sfDir)
-        .select(
-          floor(unix_timestamp(col("window_start")) / 3600).cast("long").as("hour_id"),
-          col("event_type"), col("n_rows"), col("n_invalid"))
-        .writeStream.format("memory").queryName(nm)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    // Complete mode re-emits the FULL aggregation state on every batch and
-    // never watermark-drops it, so the trailing no-data micro-batch (which
-    // exists to advance the watermark and flush/evict state) cannot change
-    // the sink contents — skip it and its full round of state-store commits
-    // (round-7; append mode MUST keep it: the final watermark advance is
-    // exactly what decides its emitted window set).
-    if (mode == "complete") withoutNoDataBatches(spark)(run()) else run()
+    windowedVerdicts(spark, sfDir)
+      .select(
+        floor(unix_timestamp(col("window_start")) / 3600).cast("long").as("hour_id"),
+        col("event_type"), col("n_rows"), col("n_invalid"))
+      .writeStream.format("memory").queryName(nm)
+      .outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     detachSink(spark, nm)
-  }
-
-  /** Runs `body` with `spark.sql.streaming.noDataMicroBatches.enabled`
-    * false, restoring the previous value after — ONLY safe for runs whose
-    * output provably does not depend on the trailing no-data batch (see
-    * the call sites' arguments). */
-  private def withoutNoDataBatches[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   /** Driver-oracle surface for APPEND-mode watermark semantics
@@ -250,19 +226,12 @@ object StreamingValidation {
   def lwwDedupBatch(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val nm = s"st_lww_${sinkId.incrementAndGet()}"
-    // the trailing no-data batch can only fire TTL timeouts, and a timeout
-    // handler emits nothing (it just removes the state cell) — with the
-    // default 24 h retention no timeout can even arm below the final
-    // watermark, so the emission log is identical without the batch; skip
-    // its full round of state-store commits (round-7)
-    withoutNoDataBatches(spark) {
-      val q = lwwDedupStream(spark, sfDir)
-        .writeStream.format("memory").queryName(nm)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    lwwDedupStream(spark, sfDir)
+      .writeStream.format("memory").queryName(nm)
+      .outputMode("update")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
     // reduce the emission log to converged state BEFORE detaching, so the
     // collected local frame is keyspace-sized, not log-sized
     val reduced = spark.table(nm)

@@ -107,6 +107,38 @@ class EngineSpec extends AnyFunSuite {
     assert(durRows == clips.filter(_._2 % 157 == 0).map(_._1).toSet)
   }
 
+  test("replicated full suite: refs and duplicates follow the replicated base") {
+    import graft.run.ValidationPipeline
+    val k = 2
+    // the recompute: per clip_id over the collected replicated base, its
+    // row count and whether any of its rows is kept in refs (ord % 131 != 0)
+    val base = ValidationPipeline.replicatedBase(spark, sfDir, k).collect()
+    val rows = base.map(r => (r.getString(0), r.getLong(5)))
+    val byId = rows.groupBy(_._1)
+    val missingRef = byId.collect { case (id, rs) if rs.forall(_._2 % 131 == 0) => id }.toSet
+    val dup = byId.collect { case (id, rs) if rs.length > 1 => id }.toSet
+    assert(missingRef.nonEmpty && dup.nonEmpty)
+    val refViolations = graft.compile.CheckCompiler.violations(
+        ValidationPipeline.augmented(spark, sfDir, k), ValidationPipeline.fullSuite(spark, sfDir, k))
+      .filter(org.apache.spark.sql.functions.col("check_name") === "ref_clip_id_refs")
+      .collect().map(_.getString(0))
+    assert(refViolations.sorted.toSeq ==
+      rows.filter(r => missingRef(r._1)).map(_._1).sorted.toSeq)
+    // a bad row: a metadata injection (carried in its columns), an audio
+    // injection (planted on its replicated ord), a missing ref, or a
+    // duplicated clip_id (the ord % 101 collisions)
+    val expectedBad = base.count { r =>
+      val (id, sr, codec, tr, o) = (r.getString(0), r.getInt(1), r.getString(3),
+        Option(r.getString(4)), r.getLong(5))
+      tr.forall(_.isEmpty) || sr < 8000 || sr > 48000 ||
+        !Set("pcm_s16le", "flac", "opus", "mp3")(codec) ||
+        o % 149 == 0 || o % 157 == 0 || missingRef(id) || dup(id)
+    }
+    val verdicts = ValidationPipeline.verdicts(spark, sfDir, k).collect()
+    assert(verdicts.map(_.getLong(1)).sum == rows.length)
+    assert(verdicts.map(_.getLong(2)).sum == expectedBad)
+  }
+
   test("Runner executes the full audio suite with checkpoint resume") {
     val out = java.nio.file.Files.createTempDirectory("graft-runner-audio").toString
     val aug = graft.run.ValidationPipeline.augmented(spark, sfDir)

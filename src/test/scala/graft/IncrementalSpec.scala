@@ -116,6 +116,13 @@ class IncrementalSpec extends AnyFunSuite {
     assert(flipped.count() > 0, "fixture must exercise the retro-flip term")
   }
 
+  test("verdictDrift leaves no cached frame behind") {
+    // frames other suites in this session cached are not this test's subject
+    spark.catalog.clearCache()
+    ClipQueries.verdictDrift(spark, sfDir).collect()
+    assert(spark.sharedState.cacheManager.isEmpty, "verdictDrift left a cached frame")
+  }
+
   test("readIncremental refuses a base snapshot with an unreadable manifest") {
     import java.nio.file.{Files, Paths}
     // a corrupted base manifest makes dataDirs(from) empty; without the
