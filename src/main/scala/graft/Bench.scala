@@ -8,7 +8,7 @@ import graft.run.ValidationPipeline
 
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_CPUS, then runs the full validation pipeline at local[N] and
-  * local[4N] (default 6 vs 24 — see the level-choice rationale below) on
+  * local[4N] (6 vs 24 — see the level-choice rationale below) on
   * the same input to evidence the north rule's N -> 4N scaling-efficiency
   * criterion (no multi-node cluster in this sandbox; two parallelism levels
   * on identical input stand in for two cluster sizes). Prints ONE JSON line
@@ -81,9 +81,7 @@ object Bench {
     //    A full untimed warmup pass at the smallest sf first: otherwise the
     //    alphabetically first query absorbs all JIT/codegen/session startup
     //    and its number is not comparable to the rest (round-1 ann_ivf
-    //    artifact). SPARK_GRAFT_SCALING_ONLY=1 skips the sweep entirely
-    //    (stability reruns).
-    val scalingOnly = sys.env.get("SPARK_GRAFT_SCALING_ONLY").contains("1")
+    //    artifact).
     var spark: SparkSession = null
     def perQuerySweep(): Seq[(String, Double)] = {
       spark = newSession(cpus)
@@ -204,10 +202,10 @@ object Bench {
     // drifts run to run, so alternating levels hedges monotonic drift and
     // the per-level minimum damps one-off noise; the first pair also warms
     // JIT and the page cache.
-    val nLo = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "6").toInt
+    val nLo = 6
     val nHi = 4 * nLo
-    val repl = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPL", "6").toInt
-    val pairs = sys.env.getOrElse("SPARK_GRAFT_SCALE_PAIRS", "3").toInt
+    val repl = 6
+    val pairs = 3
 
     // Degraded-host policy (round-5, the round-4 top item): the pure-CPU
     // control is measured BEFORE and AFTER the scaling samples; if the
@@ -247,15 +245,14 @@ object Bench {
     // (650 Mops / 45 GB/s) still fail an attempt that is bimodal within
     // its own window: sustained-degraded plateaus read 390-580 Mops /
     // 32-64 GB/s, transient dips inside healthy windows read 650-810 /
-    // 48-66. All four thresholds env-overridable for a different host
-    // class; both the median and the min of every attempt stay on the
+    // 48-66. Both the median and the min of every attempt stay on the
     // record (BENCH.md table + JSON). Like the ratio gate, the stamp gate
     // is host-health ONLY — the efficiency number never triggers a retry.
-    val HealthyMops = sys.env.getOrElse("SPARK_GRAFT_HEALTHY_MOPS", "880").toDouble
-    val HealthyGbs = sys.env.getOrElse("SPARK_GRAFT_HEALTHY_GBS", "68").toDouble
-    val FloorMops = sys.env.getOrElse("SPARK_GRAFT_FLOOR_MOPS", "650").toDouble
-    val FloorGbs = sys.env.getOrElse("SPARK_GRAFT_FLOOR_GBS", "45").toDouble
-    val maxAttempts = sys.env.getOrElse("SPARK_GRAFT_SCALE_ATTEMPTS", "3").toInt
+    val HealthyMops = 880.0
+    val HealthyGbs = 68.0
+    val FloorMops = 650.0
+    val FloorGbs = 45.0
+    val maxAttempts = 3
     // JVM GC wall per sample, recorded for transparency (NOT a gate): the
     // sin-loop control is latency-bound and blind to memory-side
     // degradation, so when a 4N sample runs slow under a healthy control
@@ -278,7 +275,7 @@ object Bench {
     // efficiency upward). Every draw is printed to stderr so it is on the
     // record, and the per-level MEDIAN efficiency is reported alongside the
     // min-based headline as the estimator-bias cross-check.
-    val extra = sys.env.getOrElse("SPARK_GRAFT_SCALE_EXTRA", "2").toInt
+    val extra = 2
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -397,54 +394,52 @@ object Bench {
     // full-table metadata lineage (Runner.scopedInput/globalInput). The
     // resumed wall should therefore sit near
     // (cheap global scan) + 8/32 x (full synth+write work), far below the
-    // full wall. Skipped in scaling-only stability reruns.
+    // full wall.
     // Stamped like the scaling section: the first two stamped runs showed
     // the crash-24 reading 24-42% ABOVE the full-32 wall, while a
     // controlled both-orders probe at 956-1098 Mops read crash24 40.9-41.2 s
     // vs full32 50.9-51.1 s (proportional 0.80 in either order) — the
     // in-bench inversions were minute-scale host windows landing on one
     // sub-measurement, which only a stamp bracketing each run can show.
-    val resumeStats: Option[(Double, Double, Double, Int, Int, Seq[Double])] =
-      if (scalingOnly) None
-      else Some {
-        spark = newSession(nHi)
-        val suite = ValidationPipeline.fullSuite(spark, sfDir, repl)
-        val globalIn = ValidationPipeline.replicatedBase(spark, sfDir, repl)
-        def timedRun(outDir: String, maxB: Int): (Double, Int) = {
-          val t0 = System.nanoTime()
-          val sum = graft.run.Runner.run(spark,
-            ValidationPipeline.augmented(spark, sfDir, repl), suite, outDir,
-            maxBuckets = maxB,
-            scopedInput =
-              Some(todo => ValidationPipeline.augmented(spark, sfDir, repl, Some(todo))),
-            globalInput = Some(globalIn))
-          ((System.nanoTime() - t0) / 1e9, sum.processed.size)
-        }
-        val dirFull = graft.io.Scratch.register("graft-bench-resume-full")
-        val dirCrash = graft.io.Scratch.register("graft-bench-resume-crash")
-        // untimed 2-bucket warmup on a throwaway dir: the first Runner
-        // invocation absorbs plan-compile/JIT costs that would otherwise
-        // inflate full_sec and FLATTER the resume ratio (measured at smoke
-        // scale: a cold full run read 16.6 s against a warm 24-bucket run
-        // of 5.4 s)
-        timedRun(graft.io.Scratch.register("graft-bench-resume-warm"), 2)
-        def stamp(): Double = {
-          val m = graft.tools.HostProbe.sinMops(32)
-          System.err.println(f"[bench] resume-section stamp: sin $m%.0f Mops/s")
-          m
-        }
-        val s0 = stamp()
-        val (fullSec, nFull) = timedRun(dirFull, Int.MaxValue)
-        val s1 = stamp()
-        val (crashSec, nCrash) = timedRun(dirCrash, 24)
-        val s2 = stamp()
-        val (resumeSec, nResume) = timedRun(dirCrash, Int.MaxValue)
-        val s3 = stamp()
-        require(nFull == 32 && nCrash == 24 && nResume == 8,
-          s"resume section bucket counts wrong: $nFull/$nCrash/$nResume")
-        spark.stop()
-        (fullSec, crashSec, resumeSec, nCrash, nResume, Seq(s0, s1, s2, s3))
+    val resumeStats: (Double, Double, Double, Int, Int, Seq[Double]) = {
+      spark = newSession(nHi)
+      val suite = ValidationPipeline.fullSuite(spark, sfDir, repl)
+      val globalIn = ValidationPipeline.replicatedBase(spark, sfDir, repl)
+      def timedRun(outDir: String, maxB: Int): (Double, Int) = {
+        val t0 = System.nanoTime()
+        val sum = graft.run.Runner.run(spark,
+          ValidationPipeline.augmented(spark, sfDir, repl), suite, outDir,
+          maxBuckets = maxB,
+          scopedInput =
+            Some(todo => ValidationPipeline.augmented(spark, sfDir, repl, Some(todo))),
+          globalInput = Some(globalIn))
+        ((System.nanoTime() - t0) / 1e9, sum.processed.size)
       }
+      val dirFull = graft.io.Scratch.register("graft-bench-resume-full")
+      val dirCrash = graft.io.Scratch.register("graft-bench-resume-crash")
+      // untimed 2-bucket warmup on a throwaway dir: the first Runner
+      // invocation absorbs plan-compile/JIT costs that would otherwise
+      // inflate full_sec and FLATTER the resume ratio (measured at smoke
+      // scale: a cold full run read 16.6 s against a warm 24-bucket run
+      // of 5.4 s)
+      timedRun(graft.io.Scratch.register("graft-bench-resume-warm"), 2)
+      def stamp(): Double = {
+        val m = graft.tools.HostProbe.sinMops(32)
+        System.err.println(f"[bench] resume-section stamp: sin $m%.0f Mops/s")
+        m
+      }
+      val s0 = stamp()
+      val (fullSec, nFull) = timedRun(dirFull, Int.MaxValue)
+      val s1 = stamp()
+      val (crashSec, nCrash) = timedRun(dirCrash, 24)
+      val s2 = stamp()
+      val (resumeSec, nResume) = timedRun(dirCrash, Int.MaxValue)
+      val s3 = stamp()
+      require(nFull == 32 && nCrash == 24 && nResume == 8,
+        s"resume section bucket counts wrong: $nFull/$nCrash/$nResume")
+      spark.stop()
+      (fullSec, crashSec, resumeSec, nCrash, nResume, Seq(s0, s1, s2, s3))
+    }
 
     // EVERY sentence below is derived from values measured in THIS run —
     // no frozen cross-round claims (round-4 What's-wrong #1: a hard-coded
@@ -587,27 +582,25 @@ object Bench {
         // margin markers
         .replace("@SIZE_ROWS@", sizeRows)
         .replace("@POLICY_NOTE@", policyNote)
-        .replace("@RESUME_MD@", resumeStats match {
-          case Some((f, c, r, nc, nr, st)) =>
-            f"""Resume-from-checkpoint, same run (checkpointed Runner at
-               |local[$nHi] over the same input — the north rule's
-               |"resumable from checkpoints", measured at bench scale): a
-               |full fresh run of all 32 buckets took $f%.2f s; a fresh run
-               |killed after $nc buckets took $c%.2f s; resuming it
-               |completed the remaining $nr buckets in $r%.2f s —
-               |${100 * r / f}%.0f%% of the full wall for
-               |${100.0 * nr / 32}%.0f%% of the buckets. Resume re-derives
-               |the expensive fused synth pass ONLY for unfinished buckets
-               |(Runner.scopedInput); the floor under strict
-               |proportionality is the cheap full-table metadata scan the
-               |global uniqueness check irreducibly needs, plus fixed job
-               |overhead. Host stamps bracketing the three runs, in order:
-               |${st.map(m => f"$m%.0f").mkString(" / ")} sin-Mops/s — read
-               |any full/crash/resume inversion against these (a controlled
-               |both-orders probe shows the walls proportional to bucket
-               |count on a quiet host: BASELINE.md round-6 notes).""".stripMargin
-          case None =>
-            "Resume evidence: not measured in this run (scaling-only rerun)."
+        .replace("@RESUME_MD@", {
+          val (f, c, r, nc, nr, st) = resumeStats
+          f"""Resume-from-checkpoint, same run (checkpointed Runner at
+             |local[$nHi] over the same input — the north rule's
+             |"resumable from checkpoints", measured at bench scale): a
+             |full fresh run of all 32 buckets took $f%.2f s; a fresh run
+             |killed after $nc buckets took $c%.2f s; resuming it
+             |completed the remaining $nr buckets in $r%.2f s —
+             |${100 * r / f}%.0f%% of the full wall for
+             |${100.0 * nr / 32}%.0f%% of the buckets. Resume re-derives
+             |the expensive fused synth pass ONLY for unfinished buckets
+             |(Runner.scopedInput); the floor under strict
+             |proportionality is the cheap full-table metadata scan the
+             |global uniqueness check irreducibly needs, plus fixed job
+             |overhead. Host stamps bracketing the three runs, in order:
+             |${st.map(m => f"$m%.0f").mkString(" / ")} sin-Mops/s — read
+             |any full/crash/resume inversion against these (a controlled
+             |both-orders probe shows the walls proportional to bucket
+             |count on a quiet host: BASELINE.md round-6 notes).""".stripMargin
         })
     // only the real benchmark scale updates the committed artifact — a
     // smoke run at sf0.001 must not clobber BENCH.md with startup-dominated
@@ -624,10 +617,9 @@ object Bench {
     //    next round's verdict separate engine deltas from host drift
     //    (round-4 ask #5; min of before/after = conservative host speed
     //    during the sweep window).
-    val sweepMopsBefore = if (scalingOnly) 0.0 else cpuRateMops(cpus)
-    val results: Seq[(String, Double)] =
-      if (scalingOnly) Seq.empty else perQuerySweep()
-    val sweepMopsAfter = if (scalingOnly) 0.0 else cpuRateMops(cpus)
+    val sweepMopsBefore = cpuRateMops(cpus)
+    val results: Seq[(String, Double)] = perQuerySweep()
+    val sweepMopsAfter = cpuRateMops(cpus)
 
     // JSON line layout (round-6, the round-5 top defect): round-5's line
     // grew to ~3.1 KB (9-decimal per-query seconds x 50 entries + the
@@ -646,9 +638,10 @@ object Bench {
     }.mkString("[", ",", "]")
     val sweepCtl =
       f"""{"mops_before":$sweepMopsBefore%.1f,"mops_after":$sweepMopsAfter%.1f}"""
-    val resumeJson = resumeStats.map { case (f, c, r, nc, nr, st) =>
+    val resumeJson = {
+      val (f, c, r, nc, nr, st) = resumeStats
       f""","resume":{"full_sec":$f%.2f,"crash_sec":$c%.2f,"resume_sec":$r%.2f,"crash_buckets":$nc,"resumed_buckets":$nr,"mops":[${st.map(m => f"$m%.0f").mkString(",")}]}"""
-    }.getOrElse("")
+    }
     println(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","scaling":$scal,"size_axis":$sizes,"sweep_control":$sweepCtl$resumeJson}""")
   }

@@ -121,36 +121,24 @@ object AudioQueries {
       })
   }
 
-  /** Shared materialization of [[measured]] (round-4): the four au_*
-    * driver queries each consume the SAME deterministic fused pass, so at
-    * 100 TB you synthesize+measure ONCE and let every consumer read the
-    * narrow result — not once per query. First call per (JVM, sfDir)
-    * writes the ClipMeasure frame to a temp parquet dir; later calls (any
-    * session in this JVM) scan it. Parquet, not .persist(): survives
-    * session-owner clearCache() between queries, spills to disk by
-    * construction, and is exactly the "materialize `measured` once" shape
-    * a production pipeline would write as a table. Assumes the input
-    * parquet at `sfDir` is immutable for the JVM lifetime (true for the
-    * driver-generated test data; a production pipeline would key the
-    * materialized table on the input snapshot id instead). Temp dirs are
-    * removed by a shutdown hook. */
-  private val sharedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      sharedDirs.values.forEach(graft.io.Scratch.deleteRecursively(_))))
-  }
+  /** Shared materialization of [[measured]]: the four au_* driver
+    * queries each consume the SAME deterministic fused pass, so at 100 TB
+    * you synthesize+measure ONCE and let every consumer read the narrow
+    * result — not once per query. The first call per (JVM, sfDir) writes
+    * the ClipMeasure frame to a staged scratch parquet
+    * ([[graft.io.Scratch.staged]]); later calls (any session in this JVM)
+    * scan it. Parquet, not .persist(): survives session-owner clearCache()
+    * between queries, spills to disk by construction, and is exactly the
+    * "materialize `measured` once" shape a production pipeline would write
+    * as a table. Assumes the input parquet at `sfDir` is immutable for the
+    * JVM lifetime (true for the driver-generated test data; a production
+    * pipeline would key the materialized table on the input snapshot id
+    * instead). */
   def measuredShared(spark: SparkSession, sfDir: String): Dataset[ClipMeasure] = {
     import spark.implicits._
-    val dir = sharedDirs.computeIfAbsent(sfDir, _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft-measured").toString
-      // a FAILED materialization never registers in sharedDirs, so the
-      // shutdown hook would miss its partial output — delete it eagerly
-      // before rethrowing (round-4 advice: each retry otherwise leaks
-      // another orphan temp dir)
-      try measured(spark, sfDir).toDF().write.mode("overwrite").parquet(d)
-      catch { case e: Throwable => graft.io.Scratch.deleteRecursively(d); throw e }
-      d
-    })
+    val dir = graft.io.Scratch.staged(sfDir, "graft-measured") { d =>
+      measured(spark, sfDir).toDF().write.mode("overwrite").parquet(d)
+    }
     spark.read.parquet(dir).as[ClipMeasure]
   }
 

@@ -169,31 +169,36 @@ object CheckCompiler {
   /** Duplicate groups an append FORMED OR GREW — the incremental-validation
     * analogue of [[Unique]]: global count over the narrow
     * (old keys ∪ delta keys) lineage, emitting only groups with at least
-    * one delta member. Groups entirely inside the old snapshot are NOT
-    * re-reported — they were reported when THEIR commit was validated.
+    * one delta member (`cnt > cnt_old`). Groups entirely inside the old
+    * snapshot are NOT re-reported — they were reported when THEIR commit
+    * was validated.
     *
     * Output: (column, cnt, cnt_old) — total group size and how many
     * members predate the append. `cnt_old` is what lets a caller reason
     * about retroactive flips: a group with `cnt_old == 1` just turned its
     * single old row from unique to duplicated (that row's verdict changes
     * even though the row itself didn't), while `cnt_old >= 2` was already
-    * a violation before the append and `cnt_old == 0` is delta-internal.
+    * a violation before the append and `cnt_old == 0` is delta-internal. */
+  def incrementalDupGroups(oldKeys: DataFrame, deltaKeys: DataFrame,
+      column: String): DataFrame =
+    keyGroups(oldKeys, deltaKeys, column).filter(col("cnt") > col("cnt_old"))
+
+  /** Every duplicated key of `column` over (old keys ∪ delta keys), with
+    * its group size `cnt` and old-member count `cnt_old`.
     *
     * Scale shape (100 TB): ONE hash aggregate over the key column with
-    * map-side partial combine — the delta-membership flag and the old-count
-    * ride the same aggregate as max/sum, so incremental-uniqueness costs
-    * exactly what plain global uniqueness costs: a narrow columnar key
-    * scan. No join, no window, no second pass. NULL keys group together
-    * (the [[Unique]] semantics stated above). */
-  def incrementalDupGroups(oldKeys: DataFrame, deltaKeys: DataFrame,
+    * map-side partial combine — the old-count rides the same aggregate, so
+    * incremental uniqueness costs exactly what plain global uniqueness
+    * costs: a narrow columnar key scan. No join, no window, no second
+    * pass. NULL keys group together (the [[Unique]] semantics stated
+    * above). */
+  private[graft] def keyGroups(oldKeys: DataFrame, deltaKeys: DataFrame,
       column: String): DataFrame =
     oldKeys.select(col(column), lit(0).as("__new"))
       .unionByName(deltaKeys.select(col(column), lit(1).as("__new")))
       .groupBy(col(column))
       .agg(
         count(lit(1)).as("cnt"),
-        max(col("__new")).as("__touch"),
         count(when(col("__new") === 0, lit(1))).as("cnt_old"))
-      .filter(col("cnt") > 1 && col("__touch") === 1)
-      .select(col(column), col("cnt"), col("cnt_old"))
+      .filter(col("cnt") > 1)
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline over the
@@ -86,94 +86,35 @@ object Dedup {
       threshold, blockCols = Seq("lang", "n_chars"))
   }
 
-  /** Near-duplicate pairs by CHARACTER-5-GRAM set Jaccard — the n-gram
-    * member of the dedup family. Character shingles catch near-dups that
-    * whitespace tokens miss (joined/reordered words, missing spaces);
-    * texts shorter than 5 chars contribute themselves as their single
-    * gram. Gram width 5 (standard w-shingling territory), not 3: ordinary
-    * same-language text shares most TRIgrams, so 3-gram similarity
-    * separates poorly (measured sf0.01: background reaches J3 ~ 0.70;
-    * 5-grams put genuine near-dups at J >= 0.8 with ZERO background pairs
-    * above 0.5 at every test scale).
-    *
-    * Candidate generation is banded MinHash-LSH over the gram set, NOT
-    * the token query's ppjoin prefix filter: frequency-based prefix
-    * filtering needs a DIVERSE token space to be selective, and a char-
-    * gram space need not be one — this corpus has only ~2,000 distinct
-    * 5-grams across 5,000 docs, so even the "rarest" grams are shared by
-    * hundreds of documents and the prefix join degenerates to ~17% of all
-    * pairs (measured: 2.1M candidates, a 40s wall). LSH candidates are
-    * vocabulary-independent and linear in docs. The candidate gate is
-    * RECALL-BOUNDED, not exact: at J >= 0.8 the 16x4-band per-pair miss
-    * probability is ~2e-4 (worse for pairs barely above threshold —
-    * 1-(1-J^4)^16 at J=0.8 exactly), so a qualifying pair CAN be
-    * deterministically missed; the exact-all-pairs DuckDB oracle's row
-    * identity is an empirical observation at the tested scales/corpora,
-    * not a guarantee (same accepted tension as [[minhashLsh]], ~1.2% per
-    * pair at its J=0.7 threshold). These formula numbers are MEASURED,
-    * not just asserted: DedupSpec's recall property seeds 2,000 pairs AT
-    * each threshold and checks measured recall against the formula within
-    * binomial error — which only passes because the hash constants are
-    * splitmix-mixed (see [[signature]]; the round-5 correlated family
-    * measured 0.943 where the formula promises 0.9907).
-    * Pairs that DO surface are exact: the
-    * verify stage computes true gram-set Jaccard. Blocking on lang folds
-    * into the band join key. */
+  /** Near-duplicate pairs by CHARACTER-5-GRAM set Jaccard, blocked on
+    * lang, through [[lshPairs]]. Character shingles catch near-dups that
+    * whitespace tokens miss (joined/reordered words, missing spaces).
+    * Gram width 5, not 3: ordinary same-language text shares most
+    * trigrams (sf0.01: background pairs reach J3 ~ 0.70), while 5-grams
+    * put genuine near-dups at J >= 0.8 with zero background pairs above
+    * 0.5 at every test scale. Candidates come from LSH, not the token
+    * query's ppjoin prefix filter: a prefix filter needs a diverse token
+    * space, and this corpus has only ~2,000 distinct 5-grams across 5,000
+    * docs, so even the rarest grams are shared by hundreds of documents
+    * and the prefix join degenerates to ~17% of all pairs (2.1M
+    * candidates, a 40 s wall). */
   def ngramJaccard(spark: SparkSession, sfDir: String, threshold: Double = 0.8): DataFrame = {
     import spark.implicits._
-    val d = docs(spark, sfDir).select("doc_id", "lang", "text").as[(Long, String, String)]
-    // grams + signatures staged once (the minhashLsh pattern): banding and
-    // per-candidate verification both read them
-    val sigs = d.map { case (id, lang, text) =>
-      val sh = charShingles(text)
-      (id, lang, sh, signature(sh))
-    }.toDF("doc_id", "lang", "grams", "sig").persist()
-    val perRow = NumHashes / Bands
-    val bandCols = (0 until Bands).map { b =>
-      struct(lit(b).as("band"),
-        hash(slice(col("sig"), b * perRow + 1, perRow)).as("bh"))
-    }
-    val banded = sigs.select(col("doc_id"), col("lang"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("lang"), col("bb.band"), col("bb.bh"))
-    val l = banded.select(col("lang"), col("band"), col("bh"), col("doc_id").as("id_a"))
-    val r = banded.select(col("lang"), col("band"), col("bh"), col("doc_id").as("id_b"))
-    val cand = l.join(r, Seq("lang", "band", "bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val gs = sigs.select(col("doc_id"), col("grams"))
-    val withG = cand
-      .join(gs.select(col("doc_id").as("id_a"), col("grams").as("g_a")), "id_a")
-      .join(gs.select(col("doc_id").as("id_b"), col("grams").as("g_b")), "id_b")
-    // exact gram-set Jaccard with codegen'd built-ins (same verify shape
-    // as minhashLsh; grams are 64-bit FNV hashes — collision effects are
-    // ~1e-19 per pair, the same assumption dd_minhash's verification makes)
-    val uni = size(array_union(col("g_a"), col("g_b")))
-    val jac = when(uni === 0, lit(1.0)).otherwise(
-      size(array_intersect(col("g_a"), col("g_b"))).cast("double") / uni)
-    val result = withG.withColumn("jaccard", jac)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    materializeAndRelease(result, sigs)
+    lshPairs(spark, docs(spark, sfDir).select("doc_id", "lang", "text").as[(Long, String, String)],
+      charShingles(_), threshold)
   }
 
-  /** Character w-gram shingles of a text, FNV-hashed, distinct. Round-7:
-    * the FNV fold runs over a sliding window of the original string —
+  /** Character w-gram shingles of a text, FNV-hashed, distinct, ascending.
+    * The FNV fold runs over a sliding window of the original string —
     * value-identical to `fnv1a(text.substring(i, i + w))` (FNV-1a is a
-    * per-char left fold, so hashing the window chars in order IS hashing
-    * the substring) without allocating one String + one char[] per gram;
-    * distinctness keeps first-occurrence order like Array.distinct did.
-    * At 100 TB the shingling map is a dominant stage and per-gram garbage
-    * is what GC-stalls it (same motivation as the synth buffer reuse). */
+    * per-char left fold) without allocating a String per gram. Texts
+    * shorter than w contribute themselves as their single gram. */
   def charShingles(text: String, w: Int = 5): Array[Long] =
     if (text.length < w) Array(fnv1a(text))
     else {
-      val n = text.length - w + 1
-      val out = new Array[Long](n)
-      val seen = new java.util.HashSet[java.lang.Long](n * 2)
-      var m = 0
+      val out = new Array[Long](text.length - w + 1)
       var i = 0
-      while (i < n) {
+      while (i < out.length) {
         var h = 0xcbf29ce484222325L
         var k = i
         val end = i + w
@@ -182,11 +123,25 @@ object Dedup {
           h *= 0x100000001b3L
           k += 1
         }
-        if (seen.add(h)) { out(m) = h; m += 1 }
+        out(i) = h
         i += 1
       }
-      if (m == n) out else java.util.Arrays.copyOf(out, m)
+      distinctSorted(out)
     }
+
+  /** Sorts `hs` in place, compacts its distinct values to the front and
+    * returns them: `hs` itself when all were distinct, else a copy of the
+    * distinct prefix. */
+  private def distinctSorted(hs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(hs)
+    var m = 0
+    var i = 0
+    while (i < hs.length) {
+      if (m == 0 || hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
+      i += 1
+    }
+    if (m == hs.length) hs else java.util.Arrays.copyOf(hs, m)
+  }
 
   /** Shared set-Jaccard core over a tokenized frame (doc_id, blockCols...,
     * tok): attribute blocking on `blockCols`, lossless ppjoin prefix
@@ -323,32 +278,27 @@ object Dedup {
     h
   }
 
-  /** 3-word shingles of a text. Round-7: the shingle hash folds the three
-    * words and the two joining spaces directly — value-identical to
-    * `fnv1a(ws(i) + " " + ws(i+1) + " " + ws(i+2))` without the two
-    * String concatenations per shingle (per-row garbage in the dominant
-    * signature stage); distinctness keeps first-occurrence order like
-    * Array.distinct did. */
+  /** 3-word shingles of a text, FNV-hashed, distinct, ascending. The hash
+    * folds the three words and the two joining spaces directly —
+    * value-identical to `fnv1a(ws(i) + " " + ws(i+1) + " " + ws(i+2))`
+    * without the two String concatenations per shingle. */
   def shingles(text: String): Array[Long] = {
     val ws = text.trim.split("\\s+")
     if (ws.length < 3) Array(fnv1a(ws.mkString(" ")))
     else {
-      val n = ws.length - 2
-      val out = new Array[Long](n)
-      val seen = new java.util.HashSet[java.lang.Long](n * 2)
-      var m = 0
+      val out = new Array[Long](ws.length - 2)
       var i = 0
-      while (i < n) {
+      while (i < out.length) {
         var h = 0xcbf29ce484222325L
         h = fnvFold(h, ws(i))
         h = (h ^ ' '.toLong) * 0x100000001b3L
         h = fnvFold(h, ws(i + 1))
         h = (h ^ ' '.toLong) * 0x100000001b3L
         h = fnvFold(h, ws(i + 2))
-        if (seen.add(h)) { out(m) = h; m += 1 }
+        out(i) = h
         i += 1
       }
-      if (m == n) out else java.util.Arrays.copyOf(out, m)
+      distinctSorted(out)
     }
   }
 
@@ -410,34 +360,54 @@ object Dedup {
     else sa.intersect(sb).size.toDouble / sa.union(sb).size
   }
 
-  /** MinHash-LSH near-dup pairs: band signatures bucket-join candidates,
-    * then exact shingle-Jaccard verification. Scale path: the band explode
-    * is x16 rows, the join key is (band, band-hash) — all shuffles are on
-    * bounded keys; no O(n^2) stage. */
+  /** Near-duplicate pairs by 3-word shingle set Jaccard over the whole
+    * corpus (one block), through [[lshPairs]]. */
   def minhashLsh(spark: SparkSession, sfDir: String, threshold: Double = 0.7): DataFrame = {
     import spark.implicits._
-    val d = docs(spark, sfDir).select("doc_id", "text").as[(Long, String)]
-    // compute shingles + signatures ONCE and stage them: three downstream
-    // consumers (band explode, per-candidate shingle joins) would otherwise
-    // re-run the expensive shingling+64-hash scan per consumer — at 100 TB
-    // that triples the dominant stage (round-1 plan showed 4 parquet scans)
-    val sigs = d.map { case (id, text) =>
-      val sh = shingles(text)
-      (id, sh, signature(sh))
-    }.toDF("doc_id", "shingles", "sig")
-      .persist()
+    lshPairs(spark, docs(spark, sfDir).select(col("doc_id"), lit("").as("block"), col("text"))
+      .as[(Long, String, String)], shingles, threshold)
+  }
+
+  /** The near-duplicate pipeline behind [[ngramJaccard]] and [[minhashLsh]]:
+    * banded MinHash-LSH candidates, then exact shingle-set Jaccard.
+    * `docs` is (doc_id, block, text); only documents of the same block can
+    * pair, since the block is part of the band join key.
+    *
+    * Shingle sets and signatures are computed once and staged, because the
+    * band explode and both per-candidate shingle joins read them. The band
+    * explode (x16 rows) carries only (block, band, bh, id), and the shingle
+    * arrays join back per candidate id, so every shuffle is on bounded keys
+    * and no stage is O(n^2).
+    *
+    * The candidate gate is RECALL-BOUNDED, not exact: with 16 bands of 4
+    * rows a pair of Jaccard J is missed with probability (1-J^4)^16, which
+    * is largest at the threshold itself: ~1.2% at J = 0.7 (dd_minhash),
+    * ~2e-4 at J = 0.8 (dd_ngram). So a qualifying pair CAN be missed; the
+    * exact-all-pairs DuckDB oracles agree at the tested scales, which is
+    * an observation, not a guarantee. DedupSpec's recall property measures
+    * these numbers on 2,000 pairs seeded at each threshold, and they hold
+    * only because the hash constants are splitmix-mixed (see
+    * [[signature]]). Pairs that do surface are exact: the verify computes
+    * the true set Jaccard with codegen'd array built-ins (both-empty sets
+    * define J = 1). Shingles are 64-bit FNV hashes, so a collision
+    * perturbs a pair with probability ~1e-19. */
+  private def lshPairs(spark: SparkSession, docs: Dataset[(Long, String, String)],
+      shingle: String => Array[Long], threshold: Double): DataFrame = {
+    import spark.implicits._
+    val sigs = docs.map { case (id, block, text) =>
+      val sh = shingle(text)
+      (id, block, sh, signature(sh))
+    }.toDF("doc_id", "block", "shingles", "sig").persist()
     val perRow = NumHashes / Bands
     val bandCols = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
         hash(slice(col("sig"), b * perRow + 1, perRow)).as("bh"))
     }
-    // candidate generation carries only (band, bh, id) — the shingle arrays
-    // stay out of the x16 band shuffle and are joined back per candidate id
-    val banded = sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bh"))
-    val l = banded.select(col("band"), col("bh"), col("doc_id").as("id_a"))
-    val r = banded.select(col("band"), col("bh"), col("doc_id").as("id_b"))
-    val cand = l.join(r, Seq("band", "bh"))
+    val banded = sigs.select(col("doc_id"), col("block"), explode(array(bandCols: _*)).as("bb"))
+      .select(col("doc_id"), col("block"), col("bb.band"), col("bb.bh"))
+    val l = banded.select(col("block"), col("band"), col("bh"), col("doc_id").as("id_a"))
+    val r = banded.select(col("block"), col("band"), col("bh"), col("doc_id").as("id_b"))
+    val cand = l.join(r, Seq("block", "band", "bh"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
@@ -445,9 +415,6 @@ object Dedup {
     val withSh = cand
       .join(shs.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
       .join(shs.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-    // exact-Jaccard verification with codegen'd built-ins (no UDF boxing in
-    // the verify stage): array_intersect/array_union are set-semantic, same
-    // as exactJaccard's toSet; both-empty shingle sets define jaccard = 1
     val uni = size(array_union(col("sh_a"), col("sh_b")))
     val jac = when(uni === 0, lit(1.0)).otherwise(
       size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") / uni)
@@ -457,29 +424,22 @@ object Dedup {
     materializeAndRelease(result, sigs)
   }
 
-  /** Shared materialization of the verified MinHash near-dup PAIR SET —
-    * the dedup family's analogue of the audio layer's measuredShared
-    * (round-4): four driver queries (dd_minhash, dd_cluster,
-    * dd_contaminate, dd_keep) consume the SAME pair graph, so at 100 TB
-    * you run the signature + banding + verify pass ONCE, write the (tiny —
-    * O(reported duplicates)) pair table, and let every downstream step
-    * read it — not once per step. First call per (JVM, sfDir, threshold)
-    * writes the [[minhashLsh]] result to a Scratch-registered temp
-    * parquet; later calls scan it. Bench books the build cost as its own
-    * "dd_pairs_materialize" entry (the au_materialize pattern). Same
-    * input-immutability assumption as measuredShared. */
-  private val pairDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), String]()
+  /** Shared materialization of the verified MinHash near-dup PAIR SET:
+    * four driver queries (dd_minhash, dd_cluster, dd_contaminate, dd_keep)
+    * consume the SAME pair graph, so at 100 TB you run the signature +
+    * banding + verify pass ONCE, write the (tiny — O(reported duplicates))
+    * pair table, and let every downstream step read it. The first call per
+    * (JVM, sfDir, threshold) writes the [[minhashLsh]] result to a staged
+    * scratch parquet ([[graft.io.Scratch.staged]]); later calls scan it.
+    * Bench books the build cost as its own "dd_pairs_materialize" entry.
+    * Assumes the input at `sfDir` is immutable for the JVM lifetime. */
   def verifiedPairsShared(spark: SparkSession, sfDir: String,
       threshold: Double = 0.7): DataFrame = {
-    val dir = pairDirs.computeIfAbsent((sfDir, threshold), _ => {
-      val d = graft.io.Scratch.register("graft-minhash-pairs")
+    val dir = graft.io.Scratch.staged((sfDir, threshold), "graft-minhash-pairs") { d =>
       val pairs = minhashLsh(spark, sfDir, threshold)
       try pairs.write.mode("overwrite").parquet(d)
-      catch { case e: Throwable => graft.io.Scratch.deleteRecursively(d); throw e }
       finally pairs.unpersist(false)
-      d
-    })
+    }
     spark.read.parquet(dir)
   }
 
@@ -517,8 +477,6 @@ object Dedup {
     * not just the plan. The anti-join is UNHINTED: duplicate cardinality
     * is data-dependent (a mostly-duplicated corpus makes the drop side
     * huge), so AQE picks broadcast only when it is actually small. */
-  private val keepDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double), String]()
   def keepTable(spark: SparkSession, sfDir: String, threshold: Double = 0.7,
       tableDir: Option[String] = None): DataFrame = {
     val clusters = minhashClusters(spark, sfDir, threshold)
@@ -527,17 +485,15 @@ object Dedup {
       .join(drop, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"), col("n_chars"),
         pmod(col("doc_id"), lit(16)).as("bucket"))
-    // Scratch churn is bounded (round-6, per the round-5 advice): with no
-    // explicit tableDir the table dir is cached per (sfDir, threshold) —
-    // round-5 registered a FRESH dir per call, so Bench's warmup + 2 sweep
-    // passes left three complete keep tables on disk until JVM exit. Each
-    // call still runs the full commit -> snapshot -> read lifecycle (the
-    // re-commit is a new snapshot version — that lifecycle IS what the
-    // timed dd_keep entry measures); superseded scratch snapshots are then
-    // expired so at most the current keep table's bytes persist. Explicit
-    // tableDir callers keep full snapshot history (time travel).
-    val table = tableDir.getOrElse(keepDirs.computeIfAbsent((sfDir, threshold),
-      _ => graft.io.Scratch.register("graft-keep")))
+    // With no explicit tableDir the table dir is staged once per
+    // (sfDir, threshold), so repeated calls (Bench's warmup and sweep
+    // passes) reuse one dir. Each call still runs the full commit ->
+    // snapshot -> read lifecycle (the re-commit is a new snapshot version;
+    // that lifecycle IS what the timed dd_keep entry measures), then
+    // expires superseded snapshots so only the current keep table's bytes
+    // persist. Explicit tableDir callers keep full snapshot history.
+    val table = tableDir.getOrElse(
+      graft.io.Scratch.staged((sfDir, threshold), "graft-keep")(_ => ()))
     graft.io.TableFormat.commit(keep, table, "bucket")
     if (tableDir.isEmpty) graft.io.TableFormat.expireSnapshots(table, keep = 1)
     clusters.unpersist(false)

@@ -22,6 +22,28 @@ object Scratch {
     d
   }
 
+  private val stagedDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, Any), String]()
+
+  /** The dir `build` filled for (`prefix`, `key`), built once per process:
+    * the first call creates a registered dir and runs `build` on it, later
+    * calls return that dir without building. A `build` that throws deletes
+    * its dir and memoizes nothing, so the next call builds again. The
+    * build runs inside the memo's `computeIfAbsent`, so it must not call
+    * `staged` itself. */
+  def staged(key: Any, prefix: String)(build: String => Unit): String =
+    stagedDirs.computeIfAbsent((prefix, key), _ => {
+      val d = register(prefix)
+      try build(d)
+      catch {
+        case e: Throwable =>
+          deleteRecursively(d)
+          dirs.remove(d)
+          throw e
+      }
+      d
+    })
+
   def deleteRecursively(d: String): Unit =
     try {
       import scala.jdk.CollectionConverters._

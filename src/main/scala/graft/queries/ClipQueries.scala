@@ -220,10 +220,9 @@ object ClipQueries {
   }
 
   /** Two-snapshot lineage for the incremental-validation queries, staged
-    * ONCE per input through the TableFormat seam (the keepDirs pattern —
-    * bounded scratch churn across Bench's warmup + sweep passes): snapshot
-    * v1 = clips with ord % 64 < 32 (covers all 32 buckets), snapshot v2 =
-    * an APPEND of the rest. The split is chosen so the duplicate-key
+    * ONCE per input ([[graft.io.Scratch.staged]]) through the TableFormat
+    * seam: snapshot v1 = clips with ord % 64 < 32 (covers all 32
+    * buckets), snapshot v2 = an APPEND of the rest. The split is chosen so the duplicate-key
     * fixture (ord % 101 -> clip_id collides with ord+1) produces all three
     * duplicate-group classes the incremental semantics must distinguish:
     * v1-internal groups (ord % 64 <= 30, both members in v1 — must NOT be
@@ -234,21 +233,18 @@ object ClipQueries {
     * delta; measured in the fixture-design probe, IncrementalSpec pins
     * the split. */
   def stagedIncrTable(spark: SparkSession, sfDir: String): String =
-    incrDirs.computeIfAbsent(sfDir, _ => {
-      val dir = graft.io.Scratch.register("graft-clips-incr")
+    graft.io.Scratch.staged(sfDir, "graft-clips-incr") { dir =>
       val base = ClipsTable.base(spark, sfDir)
       graft.io.TableFormat.commit(base.filter(col("ord") % 64 < 32), dir, "bucket")
       graft.io.TableFormat.append(base.filter(col("ord") % 64 >= 32), dir, "bucket")
-      dir
-    })
-  private val incrDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Range-laid-out clips snapshot for the data-skipping query, staged ONCE
-    * per input (keepDirs pattern). Partitioned by ord_day = ord / 4096 —
-    * the time-partition layout a production ingest naturally lands
-    * (clip ids arrive roughly monotonically) — with clip_id min/max
-    * recorded per partition in the manifest (TableFormat statsCols). A
+    * per input ([[graft.io.Scratch.staged]]). Partitioned by
+    * ord_day = ord / 4096 — the time-partition layout a production ingest
+    * naturally lands (clip ids arrive roughly monotonically) — with
+    * clip_id min/max recorded per partition in the manifest (TableFormat
+    * statsCols). A
     * clip_id range lookup then opens O(matching days) of files via
     * manifest pruning instead of scanning the table: at 10^12 rows this is
     * the difference between a point lookup and a full scan. The stats are
@@ -256,15 +252,11 @@ object ClipQueries {
     * clip_id = ord+1) can land a clip id one past its day's nominal edge,
     * and the recorded max simply covers it. */
   def stagedRangedTable(spark: SparkSession, sfDir: String): String =
-    rangedDirs.computeIfAbsent(sfDir, _ => {
-      val dir = graft.io.Scratch.register("graft-clips-ranged")
+    graft.io.Scratch.staged(sfDir, "graft-clips-ranged") { dir =>
       val base = ClipsTable.base(spark, sfDir)
         .withColumn("ord_day", (col("ord") / 4096).cast("int"))
       graft.io.TableFormat.commit(base, dir, "ord_day", statsCols = Seq("clip_id"))
-      dir
-    })
-  private val rangedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Manifest-stats range scan (Iceberg data-skipping analogue): fetch a
     * clip_id range from the range-laid-out snapshot via
@@ -284,20 +276,16 @@ object ClipQueries {
     * cycle: at a 10^12-row table the fix rewrites ONLY bucket 3's
     * partition (TableFormat.overwritePartitions), never the table; the
     * carried dirs exclude the replaced partition manifest-side. Staged once
-    * per input (keepDirs pattern). */
+    * per input ([[graft.io.Scratch.staged]]). */
   def stagedOverwriteTable(spark: SparkSession, sfDir: String): String =
-    overwriteDirs.computeIfAbsent(sfDir, _ => {
-      val dir = graft.io.Scratch.register("graft-clips-overwrite")
+    graft.io.Scratch.staged(sfDir, "graft-clips-overwrite") { dir =>
       val base = ClipsTable.base(spark, sfDir)
       graft.io.TableFormat.commit(base, dir, "bucket")
       val fixed = base.filter(col("bucket") === 3)
         .withColumn("sr_hz",
           when(col("sr_hz") === 7999, lit(16000)).otherwise(col("sr_hz")))
       graft.io.TableFormat.overwritePartitions(fixed, dir, "bucket")
-      dir
-    })
-  private val overwriteDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Post-overwrite revalidation (per-bucket): row counts and remaining
     * sr_hz range violations over the overwritten snapshot. The oracle
@@ -320,10 +308,10 @@ object ClipQueries {
     * no snr_db column; the append ships one (a measured SNR landing in the
     * pipeline later in the table's life — the additive-schema-evolution
     * case TableFormat supports). Readers see pre-evolution rows with
-    * snr_db null. Staged once per input (keepDirs pattern). */
+    * snr_db null. Staged once per input
+    * ([[graft.io.Scratch.staged]]). */
   def stagedEvolveTable(spark: SparkSession, sfDir: String): String =
-    evolveDirs.computeIfAbsent(sfDir, _ => {
-      val dir = graft.io.Scratch.register("graft-clips-evolve")
+    graft.io.Scratch.staged(sfDir, "graft-clips-evolve") { dir =>
       val base = ClipsTable.base(spark, sfDir)
       graft.io.TableFormat.commit(
         base.filter(col("ord") % 3 =!= 0), dir, "bucket")
@@ -331,10 +319,7 @@ object ClipQueries {
         base.filter(col("ord") % 3 === 0)
           .withColumn("snr_db", col("ord") % 40 + 10),
         dir, "bucket")
-      dir
-    })
-  private val evolveDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Per-bucket validation over the evolved lineage: row counts, how many
     * rows carry the late-arriving snr_db column, and its sum. The oracle
@@ -406,38 +391,29 @@ object ClipQueries {
   def verdictDrift(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.io.TableFormat
     val table = stagedIncrTable(spark, sfDir)
-    // Plan consolidation (round-7, guide §2.4 "remove shuffles outright"):
-    // the decomposition needs THREE different duplicate-key scopes —
-    // v1-internal (for n_bad_before), global (for n_bad_delta), and
-    // newly-flipped (for n_retro) — which previously ran as three separate
-    // key aggregates over overlapping inputs (one inside each verdicts call
-    // plus incrementalDupGroups). One aggregate over the tagged
-    // (v1 keys ∪ delta keys) union now yields (cnt, cnt_old) per duplicated
-    // key, and all three scopes are filters of it:
-    //   v1-internal  = cnt_old >= 2          (>=2 members predate the append)
-    //   global       = cnt > 1               (the whole table)
-    //   flipped      = cnt_old == 1          (sole old member; cnt > 1 means
-    //                                         a delta member exists, i.e.
-    //                                         incrementalDupGroups' __touch)
-    // Each filtered set is EXACTLY what the corresponding per-scope
-    // aggregate emitted (IncrementalSpec pins the decomposition against the
-    // direct recompute; the driver oracle replays the direct formulation).
+    // The decomposition needs three duplicate-key scopes, all filters of
+    // ONE aggregate over the tagged (v1 keys ∪ delta keys) union
+    // (CheckCompiler.keyGroups: cnt and cnt_old per duplicated key):
+    //   v1-internal = cnt_old >= 2    (>= 2 members predate the append)
+    //   delta       = cnt > cnt_old   (has a delta member: every group a
+    //                                  delta row belongs to)
+    //   flipped     = cnt_old == 1    (sole old member of a group the
+    //                                  delta joined)
+    // Each filter reads cnt_old, so the optimizer keeps one aggregate shape
+    // and the three consumers share one group shuffle. IncrementalSpec pins
+    // the decomposition against the direct recompute; the driver oracle
+    // replays the direct formulation.
     val s = suite(spark, sfDir)
     val v1 = TableFormat.read(spark, table, Some(1))
       .withColumn("bucket", col("bucket").cast("long"))
     val delta = TableFormat.readIncremental(spark, table, 1, 2)
       .withColumn("bucket", col("bucket").cast("long"))
-    val grouped = v1.select(col("clip_id"), lit(0).as("__new"))
-      .unionByName(delta.select(col("clip_id"), lit(1).as("__new")))
-      .groupBy("clip_id")
-      .agg(count(lit(1)).as("cnt"),
-        count(when(col("__new") === 0, lit(1))).as("cnt_old"))
-      .filter(col("cnt") > 1)
+    val grouped = CheckCompiler.keyGroups(v1, delta, "clip_id")
     val before = CheckCompiler.verdicts(v1, s,
         dupKeys = Map("clip_id" -> grouped.filter(col("cnt_old") >= 2).select("clip_id")))
       .select(col("bucket"), col("n_bad").as("n_bad_before"))
     val deltaBad = CheckCompiler.verdicts(delta, s,
-        dupKeys = Map("clip_id" -> grouped.select("clip_id")))
+        dupKeys = Map("clip_id" -> grouped.filter(col("cnt") > col("cnt_old")).select("clip_id")))
       .select(col("bucket"), col("n_bad").as("n_bad_delta"))
     // v1 rows flipped by newly-formed groups: sole old member of a group
     // the delta touched, not already bad for a row/ref reason
@@ -449,9 +425,8 @@ object ClipQueries {
     // decomposition in lockstep with verdicts' semantics: n_retro =
     // affected rows that verdicts would NOT have counted bad before
     val noUnique = s.copy(checks = s.checks.filterNot(_.isInstanceOf[Unique]))
-    // NULL-SAFE semi join (round-7, per the round-6 advice):
-    // incrementalDupGroups groups NULL keys together (the documented
-    // null-safe Unique semantics), so the v1 row affected by a NULL-key
+    // NULL-SAFE semi join: keyGroups groups NULL keys together (the
+    // documented null-safe Unique semantics), so the v1 row affected by a NULL-key
     // group must be recovered by the same <=> comparison — a plain
     // equi-join would never match it and n_retro would undercount exactly
     // when a NULL-key append collides with a single NULL-key v1 row

@@ -123,6 +123,36 @@ class IncrementalSpec extends AnyFunSuite {
     assert(spark.sharedState.cacheManager.isEmpty, "verdictDrift left a cached frame")
   }
 
+  test("verdictDrift runs its duplicate-group shuffle once") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    // the three decomposition terms filter one (v1 keys ∪ delta keys)
+    // aggregate; a consumer whose filter lets the optimizer prune cnt_old
+    // would get an aggregate of its own, and with it a second key shuffle
+    // that exchange reuse cannot match
+    def clipShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case a: AdaptiveSparkPlanExec => clipShuffles(a.executedPlan)
+      case q: QueryStageExec => clipShuffles(q.plan)
+      case _: ReusedExchangeExec => Seq.empty
+      case s: ShuffleExchangeExec =>
+        val own = s.outputPartitioning match {
+          case HashPartitioning(Seq(a: AttributeReference), _) if a.name == "clip_id" => Seq(s)
+          case _ => Seq.empty
+        }
+        own ++ s.children.flatMap(clipShuffles)
+      case other => other.children.flatMap(clipShuffles)
+    }
+    // sf0.01, where the retro-flip term is live (see the decomposition test)
+    val drift = ClipQueries.verdictDrift(spark,
+      java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString)
+    drift.collect()
+    val plan = drift.queryExecution.executedPlan
+    assert(clipShuffles(plan).size == 1, s"clip_id-keyed shuffles in the final plan:\n$plan")
+  }
+
   test("readIncremental refuses a base snapshot with an unreadable manifest") {
     import java.nio.file.{Files, Paths}
     // a corrupted base manifest makes dataDirs(from) empty; without the
