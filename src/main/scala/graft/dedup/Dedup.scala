@@ -225,25 +225,9 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
-    // per-doc arrays join back per candidate id (bounded keys); the
-    // lossless size-ratio bound (J >= t implies |B|/|A| in [t, 1/t]) prunes
-    // cross-size candidates before their intersection is evaluated
-    val docSets = docAgg.select(col("doc_id"), col("sz"), col("dts.tok").as("tset"))
-    val withT = cand
-      .join(docSets.select(col("doc_id").as("id_a"), col("sz").as("sz_a"),
-        col("tset").as("t_a")), "id_a")
-      .join(docSets.select(col("doc_id").as("id_b"), col("sz").as("sz_b"),
-        col("tset").as("t_b")), "id_b")
-      .filter(least(col("sz_a"), col("sz_b")) >=
-        lit(threshold) * greatest(col("sz_a"), col("sz_b")))
-    // exact intersection with codegen'd built-ins — tokens are distinct per
-    // doc upstream, so |intersect| over the arrays is the exact overlap
-    val inter = size(array_intersect(col("t_a"), col("t_b")))
-    val result = withT
-      .withColumn("jaccard",
-        inter.cast("double") / (col("sz_a") + col("sz_b") - inter))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    // tokens are distinct per doc upstream, so the token arrays are sets
+    val result = exactPairs(cand,
+      docAgg.select(col("doc_id"), col("sz").as("n"), col("dts.tok").as("set")), threshold)
     materializeAndRelease(result, toks, docAgg)
   }
 
@@ -396,8 +380,8 @@ object Dedup {
     import spark.implicits._
     val sigs = docs.map { case (id, block, text) =>
       val sh = shingle(text)
-      (id, block, sh, signature(sh))
-    }.toDF("doc_id", "block", "shingles", "sig").persist()
+      (id, block, sh, sh.length, signature(sh))
+    }.toDF("doc_id", "block", "shingles", "n", "sig").persist()
     val perRow = NumHashes / Bands
     val bandCols = (0 until Bands).map { b =>
       struct(lit(b).as("band"),
@@ -411,17 +395,33 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
-    val shs = sigs.select(col("doc_id"), col("shingles"))
-    val withSh = cand
-      .join(shs.select(col("doc_id").as("id_a"), col("shingles").as("sh_a")), "id_a")
-      .join(shs.select(col("doc_id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-    val uni = size(array_union(col("sh_a"), col("sh_b")))
-    val jac = when(uni === 0, lit(1.0)).otherwise(
-      size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") / uni)
-    val result = withSh.withColumn("jaccard", jac)
+    val result = exactPairs(cand, sigs.select(col("doc_id"), col("n"), col("shingles").as("set")),
+      threshold)
+    materializeAndRelease(result, sigs)
+  }
+
+  /** The candidate pairs (id_a, id_b) whose exact set Jaccard is at least
+    * `threshold`, as (id_a, id_b, jaccard rounded to 4 places). `sets` is
+    * one (doc_id, n, set) row per document, where `set` holds distinct
+    * values and `n` is its size; two empty sets have J = 1. The per-doc
+    * rows join back per candidate id (bounded keys), and the verify uses
+    * only codegen'd built-ins. */
+  private def exactPairs(cand: DataFrame, sets: DataFrame, threshold: Double): DataFrame = {
+    def side(s: String) =
+      sets.select(col("doc_id").as(s"id_$s"), col("n").as(s"n_$s"), col("set").as(s"set_$s"))
+    // lossless size-ratio bound: J <= min/max, and both are the same
+    // correctly-rounded division, so no pair with J >= t is dropped; two
+    // empty sets pass the guard instead of dividing 0 by 0
+    val (lo, hi) = (least(col("n_a"), col("n_b")), greatest(col("n_a"), col("n_b")))
+    // distinct sets: |A u B| = |A| + |B| - |A n B|
+    val inter = size(array_intersect(col("set_a"), col("set_b")))
+    val jac = when(hi === 0, lit(1.0))
+      .otherwise(inter.cast("double") / (col("n_a") + col("n_b") - inter))
+    cand.join(side("a"), "id_a").join(side("b"), "id_b")
+      .filter(hi === 0 || lo.cast("double") / hi >= threshold)
+      .withColumn("jaccard", jac)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-    materializeAndRelease(result, sigs)
   }
 
   /** Shared materialization of the verified MinHash near-dup PAIR SET:

@@ -676,20 +676,20 @@ object TableFormat {
     if (Files.exists(hint)) Some(Files.readString(hint).trim.toInt) else None
   }
 
-  def snapshots(table: String): Seq[Int] = {
-    val dir = metaDir(table)
-    if (!Files.isDirectory(dir)) Seq.empty
-    else scala.util.Using.resource(Files.list(dir)) { s =>
+  /** Committed versions, up to the version hint: a manifest above it is a
+    * commit that crashed before moving the hint; the next commit replaces it. */
+  def snapshots(table: String): Seq[Int] = currentVersion(table).fold(Seq.empty[Int]) { cur =>
+    scala.util.Using.resource(Files.list(metaDir(table))) { s =>
       // same fd-lifetime discipline as partSubdirs' listing (round-6 advice)
       s.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.startsWith("snap-") && n.endsWith(".json"))
         .map(_.stripPrefix("snap-").stripSuffix(".json").toInt)
-        .toSeq.sorted
+        .filter(_ <= cur).toSeq.sorted
     }
   }
 
-  /** Expire all but the newest `keep` snapshots — the Iceberg
+  /** Expire all but the newest `keep` snapshots (never the current one) — the Iceberg
     * `expire_snapshots` analogue: deletes the manifest files of expired
     * versions and every data dir no RETAINED snapshot references (append
     * snapshots carry dirs forward, so reference-counting against the kept
@@ -699,7 +699,7 @@ object TableFormat {
     * call this. */
   def expireSnapshots(table: String, keep: Int = 1): Unit = {
     val all = snapshots(table)
-    val (expired, kept) = all.splitAt(math.max(0, all.size - keep))
+    val (expired, kept) = all.splitAt(math.max(0, all.size - math.max(1, keep)))
     if (expired.nonEmpty) {
       val referenced = kept.flatMap(v => dataDirs(table, v)).toSet
       expired.foreach { v =>

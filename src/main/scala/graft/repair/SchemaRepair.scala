@@ -180,7 +180,6 @@ final class SchemaRepairer(rootSchema: JsonValue, mode: SchemaRepair.Mode) {
     case _ => false
   }
 
-  def mode_ : SchemaRepair.Mode = mode
   def isSalvage: Boolean = mode == Salvage
 
   /** Reference `object_schema_config`. Call with a resolved object schema. */

@@ -29,7 +29,10 @@ import graft.dsl.CheckSuite
   *     ([[CheckCompiler.checkedRows]]), so the input is derived in one
   *     pass, the verdict collect is one aggregate over the cache with no
   *     exchange, and each bucket's row and ref violations land in one
-  *     file.
+  *     file. The exchange has no partition count, so it follows
+  *     `spark.sql.shuffle.partitions` (as is with AQE off; AQE may
+  *     coalesce it), not `totalBuckets`: hashing puts a whole bucket in one
+  *     partition, and coalescing merges partitions without splitting one.
   *
   * This is the engine analogue of the reference's file-position resume
   * (`load()` from fd.tell(), json_repair.py:265-299): prior content
@@ -119,16 +122,13 @@ object Runner {
     if (todo.isEmpty) return RunSummary(Nil, done.toSeq.sorted)
 
     // Full input feeds the compiler (dataset-level checks are global);
-    // `scope` restricts what this batch reports. Explicit hash partition on
-    // the bucket column (north rule): it samples nothing, so the input
-    // lineage — which may embed the expensive fused synth pass — runs once,
-    // and each bucket lands in one partition, the key of the verdict
-    // aggregate and of the per-bucket violations write. What is persisted is
-    // the suite's checked rows (bucket, bad flag, violation structs — no
-    // input column): the violations write explodes them, and the verdict
-    // collect is one aggregate over them that reads nothing else.
+    // `scope` restricts what this batch reports. The hash partition on the
+    // bucket column (north rule; sized by the session, see above) samples
+    // nothing, so the input lineage (maybe the fused synth) runs once. The
+    // cache holds the suite's checked rows (bucket, bad flag, violation
+    // structs): the violations write explodes them, the verdicts aggregate them.
     val batchInput = scopedInput.map(f => f(todo)).getOrElse(df)
-    val input = batchInput.repartition(totalBuckets, col(suite.bucketColumn))
+    val input = batchInput.repartition(col(suite.bucketColumn))
     val checked = CheckCompiler.checkedRows(input, suite, Some(todo), globalInput)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 

@@ -294,4 +294,107 @@ class RunnerSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
     assert(verdicts.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet == oneShot)
   }
+
+  test("the bucket exchange follows the session's shuffle partitions, not totalBuckets") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import spark.implicits._
+    import graft.dsl._
+    // 32 buckets, every one holding failing rows; the spec's session has 4
+    // shuffle partitions
+    val df = (0 until 320).map(i => (f"c$i%03d", i.toLong % 32, i.toLong))
+      .toDF("clip_id", "bucket", "ord")
+    val suite = CheckSuite("clip_id", "bucket",
+      Seq(RowExpr("ord_3", "ord", col("ord") % 3 === 1, col("ord").cast("string"))), Map.empty)
+    val out = Files.createTempDirectory("graft-runner-parallelism").toString
+    // tasks run per job, and the job whose result stage writes the violations
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobTasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val writeJobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(stageJob.put(_, e.jobId))
+        if (e.stageInfos.maxBy(_.stageId).name.startsWith("parquet at Runner.scala")) writeJobs.add(e.jobId)
+        jobGroups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(stageJob.get(e.stageId)).foreach(j => jobTasks.merge(j, 1, Integer.sum))
+    }
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[org.apache.spark.sql.execution.SparkPlan]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    try {
+      Runner.run(spark, df, suite, out, totalBuckets = 32)
+      sc.setJobGroup("after-run", "marker")
+      spark.range(4).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobGroups.contains("after-run") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally {
+      sc.removeSparkListener(listener)
+      spark.listenerManager.unregister(qeListener)
+    }
+    assert(Runner.completedBuckets(out).size == 32)
+    assert(writeJobs.size == 1, s"${writeJobs.size} violations write jobs")
+    val writeTasks = jobTasks.getOrDefault(writeJobs.peek, 0)
+    assert(writeTasks >= 1 && writeTasks <= 5, s"the violations write ran $writeTasks tasks")
+    // hashing keeps each bucket whole: one file per bucket dir
+    for (b <- 0 until 32) {
+      val files = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(out, "violations", s"bucket=$b")))(
+        _.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")))
+      assert(files == 1, s"violations/bucket=$b holds $files parquet files")
+    }
+    // the verdict aggregate reads the cached rows with no exchange of its own
+    val helper = new AdaptiveSparkPlanHelper {}
+    val verdictPlans = plans.asScala.filter(p => helper.collect(p) { case s: InMemoryTableScanExec => s }.nonEmpty)
+    assert(verdictPlans.size == 1, s"${verdictPlans.size} collects over the cached rows")
+    assert(helper.collect(verdictPlans.head) { case e: Exchange => e }.isEmpty,
+      s"verdict aggregate plan has an exchange:\n${verdictPlans.head}")
+  }
+
+  test("an unreadable batch manifest: its buckets recompute, outputs equal a clean run's") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.dsl._
+    val df = (0 until 90).map(i => (f"c${i % 80}%03d", (i % 11).toLong % 8, i.toLong))
+      .toDF("clip_id", "bucket", "ord")
+    val suite = CheckSuite("clip_id", "bucket", Seq(Unique("clip_id"),
+      RowExpr("ord_odd", "ord", col("ord") % 2 === 1, col("ord").cast("string"))), Map.empty)
+    def verd(o: String) = Runner.verdicts(spark, o)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
+    def viol(o: String) = Runner.violations(spark, o)
+      .collect().map(_.mkString("|")).toSeq.sorted
+    val clean = Files.createTempDirectory("graft-runner-clean").toString
+    Runner.run(spark, df, suite, clean, totalBuckets = 8)
+
+    val out = Files.createTempDirectory("graft-runner-torn").toString
+    val r1 = Runner.run(spark, df, suite, out, totalBuckets = 8, maxBuckets = 3)
+    Runner.run(spark, df, suite, out, totalBuckets = 8)
+    assert(Runner.completedBuckets(out).size == 8)
+    // the first batch's manifest no longer parses (a torn or corrupted file)
+    val manifest = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(out, "_manifest")))(
+      _.iterator().asScala.filter(p => Files.readString(p).contains("\"bucket\": 0,")).toList)
+    assert(manifest.size == 1)
+    val text = Files.readString(manifest.head)
+    Files.writeString(manifest.head, text.take(text.length / 2))
+    assert(Runner.completedBuckets(out) == (3L until 8L).toSet)
+
+    // the re-run recomputes exactly that batch's buckets into the same dirs
+    val r3 = Runner.run(spark, df, suite, out, totalBuckets = 8)
+    assert(r3.processed.map(_.bucket) == r1.processed.map(_.bucket))
+    assert(verd(out) == verd(clean))
+    assert(viol(out) == viol(clean))
+  }
 }

@@ -493,4 +493,26 @@ class TableFormatSpec extends AnyFunSuite {
     assert(rows(TableFormat.readWhere(spark, table, "id", 2L, 8L)) ==
       rows(fixed.filter(col("id").between(2L, 8L))))
   }
+
+  test("a commit that crashed before moving the version hint: expiry keeps the current snapshot") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-crashed-commit").toString
+    def rows(vs: Range) = vs.map(i => (i.toLong, i % 3)).toDF("id", "bucket")
+    TableFormat.commit(rows(0 until 10), table, "bucket")
+    TableFormat.commit(rows(10 until 20), table, "bucket")
+    // v3 writes its data and manifest, then the process dies before the
+    // hint moves: the on-disk state is v3's files with the hint still at 2
+    TableFormat.commit(rows(20 until 30), table, "bucket")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(table, "metadata", "version-hint.txt"), "2")
+    assert(TableFormat.snapshots(table) == Seq(1, 2))
+    TableFormat.expireSnapshots(table, 1)
+    assert(TableFormat.snapshots(table) == Seq(2))
+    assert(TableFormat.read(spark, table).select("id").as[Long].collect().sorted.toSeq ==
+      (10L until 20L))
+    // keep = 0 still keeps the current snapshot; the next commit replaces v3's leftovers
+    TableFormat.expireSnapshots(table, 0)
+    assert(TableFormat.read(spark, table).count() == 10)
+    assert(TableFormat.commit(rows(30 until 35), table, "bucket") == 3)
+    assert(TableFormat.read(spark, table).count() == 5)
+  }
 }
