@@ -10,10 +10,10 @@ import graft.dsl._
   *
   * One lowering, [[checkedRows]], turns a suite into one row per input row
   * in `scope`: its `bucket`, a `__bad` flag and the array `__v` of its
-  * row-check and ref-check violation structs. [[violationsWithBucket]]
-  * explodes `__v` and adds one row per duplicate group; [[verdicts]] groups
-  * the same rows by bucket. Both therefore read the same predicates, the
-  * same ref joins and the same duplicate aggregate.
+  * violation structs, a duplicate group's on its rows in the group's owner
+  * bucket. [[violationsWithBucket]] explodes `__v`, one row per group;
+  * [[verdicts]] groups the same rows by bucket. Both therefore read the
+  * same predicates, the same ref joins and the same duplicate aggregate.
   *
   * Semantics, the same on every path that goes through here (batch
   * queries, the headline `ValidationPipeline.verdicts` and with it
@@ -26,7 +26,7 @@ import graft.dsl._
   *     in GROUP BY: two NULL keys are duplicates of each other (the flags
   *     join back null-safe, `<=>`). Each duplicate group is reported once,
   *     with its size as detail, owned by its minimum bucket, and only when
-  *     that owner is in `scope`;
+  *     that owner is in `scope` (its rows in the owner bucket report it);
   *   - [[RefIntegrity]]: a row is bad when its value equals no key in the
   *     first column of the ref table. NULL equals nothing, so a NULL value
   *     is always a violation and a NULL ref key matches no row; duplicate
@@ -45,12 +45,12 @@ import graft.dsl._
   * Scale notes (100 TB):
   *   - row checks: zero shuffle, whole-stage-codegen'd `CASE WHEN` chains,
   *     fused with the ref presence joins into one pass over the wide input;
-  *   - uniqueness: hash aggregate on the key, column-pruned to
-  *     (key, bucket). Spark's partial aggregation is the pre-agg, so a hot
-  *     duplicate key costs one row per task; the duplicated keys join back
-  *     unhinted (AQE broadcasts them when few, the normal case, and splits
-  *     skew in a shuffled join when not). No window, so no single-task
-  *     hot-spot;
+  *   - uniqueness: one hash aggregate on the key, column-pruned to
+  *     (key, bucket), for each group's size and owner; its partial
+  *     aggregation is the pre-agg, so a hot key costs one row per task. The
+  *     groups join back unhinted (AQE broadcasts them when few, else splits
+  *     skew in a shuffled join); their rows collapse by (bucket, struct),
+  *     with no exchange over bucket-partitioned rows. No window;
   *   - referential: presence LEFT join against the distinct ref keys;
   *     broadcast under the threshold, else sort-merge.
   */
@@ -63,12 +63,12 @@ object CheckCompiler {
 
   /** [[violations]] plus the owning bucket per row — the Runner writes this
     * shape partitioned by bucket so retries overwrite per-bucket dirs
-    * idempotently (uniqueness violations are owned by the group's min
-    * bucket, same attribution rule the scope filter uses). */
+    * idempotently (a duplicate group is reported by its rows of `df` in
+    * its min bucket, the same attribution rule the scope filter uses). */
   def violationsWithBucket(df: DataFrame, suite: CheckSuite,
       scope: Option[Seq[Long]] = None,
       globalDf: Option[DataFrame] = None): DataFrame =
-    violationsOf(checkedRows(df, suite, scope, globalDf), suite, scope, globalDf.getOrElse(df))
+    violationsOf(checkedRows(df, suite, scope, globalDf), suite)
 
   /** Per-bucket pass/fail verdicts: `n_rows` input rows, `n_bad` of them
     * bad under any check.
@@ -81,7 +81,7 @@ object CheckCompiler {
     * verdictDrift derive its three different duplicate scopes
     * (v1-internal, global, newly-flipped) from ONE shared aggregate.
     * Callers own the equivalence of the precomputed set; the null-safe
-    * join-back is unchanged. */
+    * join-back is unchanged. It flags rows but reports no group. */
   def verdicts(df: DataFrame, suite: CheckSuite, scope: Option[Seq[Long]] = None,
       globalDf: Option[DataFrame] = None,
       dupKeys: Map[String, DataFrame] = Map.empty): DataFrame =
@@ -104,9 +104,10 @@ object CheckCompiler {
   /** The one lowering: the rows of `df` in `scope`, each as
     * (`bucket`, `__bad`, `__v`). Each ref check adds a presence left join
     * against the ref's distinct keys; each unique check adds a null-safe
-    * left join against its duplicated keys (`dupKeys`, else
-    * [[dupGroups]]). A row is bad when `__v` is non-empty or its key is
-    * duplicated. */
+    * left join against its duplicate groups (key, size, owning minimum
+    * bucket; else the keys of `dupKeys`), and a row in its group's owner
+    * bucket carries the group in `__v`. A row is bad when `__v` is
+    * non-empty or its key is duplicated. */
   private[graft] def checkedRows(df: DataFrame, suite: CheckSuite,
       scope: Option[Seq[Long]], globalDf: Option[DataFrame],
       dupKeys: Map[String, DataFrame] = Map.empty): DataFrame = {
@@ -118,15 +119,21 @@ object CheckCompiler {
       cur = cur.join(rk, cur(r.column) === col(s"__refk_${r.name}"), "left")
     }
     suite.uniqueChecks.foreach { u =>
-      val dk = dupKeys.getOrElse(u.column, dupGroups(globalDf.getOrElse(df), suite, u))
-        .select(col(u.column).as(s"__dupk_${u.column}"), lit(true).as(s"__dup_${u.column}"))
-      cur = cur.join(dk, cur(u.column) <=> col(s"__dupk_${u.column}"), "left")
+      val k = u.column
+      val dk = dupKeys.get(k).map(_.select(col(k), lit(null).as("cnt"), lit(null).as("__owner")))
+        .getOrElse(globalDf.getOrElse(df).groupBy(col(k))
+          .agg(count(lit(1)).as("cnt"), min(bkt).as("__owner")).filter(col("cnt") > 1))
+        .select(col(k).as(s"__dupk_$k"), lit(true).as(s"__dup_$k"),
+          col("cnt").as(s"__dupc_$k"), col("__owner").as(s"__dupo_$k"))
+      cur = cur.join(dk, cur(k) <=> col(s"__dupk_$k"), "left")
     }
     val structs =
       suite.rowChecks.map(c => when(c.failWhen,
         violation(col(suite.keyColumn), c, coalesce(c.detail, lit(""))))) ++
       suite.refChecks.map(r => when(col(s"__refk_${r.name}").isNull,
-        violation(col(r.column), r, lit("missing_ref"))))
+        violation(col(r.column), r, lit("missing_ref")))) ++
+      suite.uniqueChecks.map(u => when(col(s"__dupo_${u.column}") === bkt,
+        violation(col(u.column), u, col(s"__dupc_${u.column}").cast("string"))))
     val v =
       if (structs.isEmpty) array().cast(ArrayType(ViolationStruct))
       else array_compact(array(structs: _*))
@@ -138,26 +145,16 @@ object CheckCompiler {
     struct(id.cast("string").as("clip_id"), lit(c.name).as("check_name"),
       lit(c.column).as("column_name"), detail.as("detail"))
 
-  /** Duplicate groups of `u`'s column over `keys`: the key, the group size
-    * `cnt` and its owning (minimum) bucket `__owner`. */
-  private def dupGroups(keys: DataFrame, suite: CheckSuite, u: Unique): DataFrame =
-    keys.groupBy(col(u.column))
-      .agg(count(lit(1)).as("cnt"), min(col(suite.bucketColumn)).as("__owner"))
-      .filter(col("cnt") > 1)
-
-  /** Violation rows of [[checkedRows]]' `rows`: its exploded structs, plus
-    * the duplicate groups over `keys` whose owner is in `scope`. */
-  private[graft] def violationsOf(rows: DataFrame, suite: CheckSuite,
-      scope: Option[Seq[Long]], keys: DataFrame): DataFrame = {
-    val perRow = rows.select(col("bucket"), explode(col("__v")).as("v"))
-      .select(col("v.*"), col("bucket"))
-    suite.uniqueChecks.map { u =>
-      val g = dupGroups(keys, suite, u)
-      scope.map(b => g.filter(col("__owner").isin(b: _*))).getOrElse(g)
-        .select(col(u.column).cast("string").as("clip_id"), lit(u.name).as("check_name"),
-          lit(u.column).as("column_name"), col("cnt").cast("string").as("detail"),
-          col("__owner").as("bucket"))
-    }.foldLeft(perRow)(_ unionByName _)
+  /** Violation rows of [[checkedRows]]' `rows`: `__v` exploded, a group
+    * entry once per bucket, a row or ref entry once per row. */
+  private[graft] def violationsOf(rows: DataFrame, suite: CheckSuite): DataFrame = {
+    val exploded = rows.select(col("bucket"), explode(col("__v")).as("v"))
+    val groups = suite.uniqueChecks.map(_.name)
+    val collapsed = if (groups.isEmpty) exploded else exploded
+      .groupBy("bucket", "v").agg(count(lit(1)).as("n"))
+      .select(col("bucket"), explode(array_repeat(col("v"),
+        when(col("v.check_name").isin(groups: _*), lit(1)).otherwise(col("n").cast("int")))).as("v"))
+    collapsed.select(col("v.*"), col("bucket"))
   }
 
   /** Per-bucket verdicts of [[checkedRows]]' `rows`. */

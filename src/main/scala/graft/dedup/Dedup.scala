@@ -526,22 +526,21 @@ object Dedup {
       .distinct().persist()
     vertices.count()
     // canonical directed edge (larger -> smaller); self-loops dropped.
-    // localCheckpoint (eager) both materializes each round and TRUNCATES
-    // the logical plan: a plain persist() leaves every round's plan nested
-    // ~6x inside the next round's, so analysis cost grows exponentially
-    // with the iteration count — the classic Spark iterative-algorithm
-    // trap (this loop hung around round 8 of a path graph before the
-    // truncation). At production scale the same call becomes a reliable
-    // checkpoint to the cluster checkpoint dir; blocks here are O(edges)
-    // and shrink per round.
+    // localCheckpoint TRUNCATES the logical plan: a plain persist() leaves
+    // every round's plan nested ~6x inside the next round's, so analysis
+    // cost grows exponentially with the iterations (this loop hung around
+    // round 8 of a path graph before the truncation). It is lazy, filled by
+    // the count() that follows, in that job. At production scale the same
+    // call becomes a reliable checkpoint to the cluster checkpoint dir;
+    // blocks here are O(edges) and shrink per round.
     var edges = pairs
       .select(greatest(col("id_a"), col("id_b")).as("src"),
         least(col("id_a"), col("id_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-      .localCheckpoint()
-    pairs.unpersist(false) // both consumers materialized (checkpoint is eager)
+      .localCheckpoint(eager = false)
     var prevCount = edges.count()
+    pairs.unpersist(false) // both consumers materialized
     var converged = false
     var iter = 0
     val MaxIters = 50
@@ -578,7 +577,7 @@ object Dedup {
         .select(greatest(col("a"), col("b")).as("src"), least(col("a"), col("b")).as("dst"))
         .filter(col("src") =!= col("dst"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager = false)
       val nextCount = next.count()
       // both sides are canonical DISTINCT sets: next ⊆ edges (one anti-join)
       // plus equal counts ⇔ set equality — exact, one job cheaper than the

@@ -106,6 +106,8 @@ final case class CheckSuite(
     bucketColumn: String,
     checks: Seq[Check],
     refs: Map[String, DataFrame] = Map.empty) {
+  require(checks.map(_.name).distinct.size == checks.size,
+    s"check names must be distinct, they key the violation rows: ${checks.map(_.name)}")
   def rowChecks: Seq[RowCheck] = checks.collect { case r: RowCheck => r }
   def uniqueChecks: Seq[Unique] = checks.collect { case u: Unique => u }
   def refChecks: Seq[RefIntegrity] = checks.collect { case r: RefIntegrity => r }

@@ -355,12 +355,12 @@ object ClipQueries {
     val s = suite(spark, sfDir)
     val rowRef = CheckCompiler.violations(
       delta, s.copy(checks = s.checks.filterNot(_.isInstanceOf[Unique])))
-    val v1Keys = TableFormat.read(spark, table, Some(1)).select("clip_id")
-    val dups = CheckCompiler
-      .incrementalDupGroups(v1Keys, delta.select("clip_id"), "clip_id")
-      .select(col("clip_id"), lit("unique_clip_id").as("check_name"),
-        lit("clip_id").as("column_name"), col("cnt").cast("string").as("detail"))
-    rowRef.unionByName(dups)
+    val v1 = TableFormat.read(spark, table, Some(1))
+    s.uniqueChecks.map(u => CheckCompiler
+      .incrementalDupGroups(v1.select(u.column), delta.select(u.column), u.column)
+      .select(col(u.column).cast("string").as("clip_id"), lit(u.name).as("check_name"),
+        lit(u.column).as("column_name"), col("cnt").cast("string").as("detail")))
+      .foldLeft(rowRef)(_ unionByName _)
   }
 
   /** Per-bucket verdict drift across an append commit — "did this commit

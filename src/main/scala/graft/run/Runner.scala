@@ -27,12 +27,13 @@ import graft.dsl.CheckSuite
   *   - each batch hash-partitions its input on the bucket column (north
   *     rule: explicit partitioning) and caches the suite's checked rows
   *     ([[CheckCompiler.checkedRows]]), so the input is derived in one
-  *     pass, the verdict collect is one aggregate over the cache with no
-  *     exchange, and each bucket's row and ref violations land in one
-  *     file. The exchange has no partition count, so it follows
-  *     `spark.sql.shuffle.partitions` (as is with AQE off; AQE may
-  *     coalesce it), not `totalBuckets`: hashing puts a whole bucket in one
-  *     partition, and coalescing merges partitions without splitting one.
+  *     pass, the violations write and the verdict collect read the cache
+  *     with no exchange of their own, and each bucket's violations, of
+  *     every check kind, land in one file. The exchange has no partition
+  *     count, so it follows `spark.sql.shuffle.partitions` (as is with AQE
+  *     off; AQE may coalesce it), not `totalBuckets`: hashing puts a whole
+  *     bucket in one partition, and coalescing merges partitions without
+  *     splitting one.
   *
   * This is the engine analogue of the reference's file-position resume
   * (`load()` from fd.tell(), json_repair.py:265-299): prior content
@@ -141,7 +142,7 @@ object Runner {
     // unpersist in finally: a throw from the write or the collect must not
     // leak the cached rows for the rest of the session
     val rows = try {
-      CheckCompiler.violationsOf(checked, suite, Some(todo), globalInput.getOrElse(df))
+      CheckCompiler.violationsOf(checked, suite)
         .write.mode("overwrite").options(Map("partitionOverwriteMode" -> "dynamic"))
         .partitionBy("bucket").parquet(s"$outDir/violations")
       CheckCompiler.verdictsOf(checked).collect()

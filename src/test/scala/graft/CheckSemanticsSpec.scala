@@ -115,6 +115,36 @@ class CheckSemanticsSpec extends AnyFunSuite {
     }
   }
 
+  test("incrementalDupGroups and the dupKeys seam equal a direct recompute") {
+    import spark.implicits._
+    for (seed <- 1L to 4L) {
+      val (rows, refList) = gen(seed)
+      val (df, refs) = frames(rows, refList)
+      // old and delta keys: a seeded split of the rows; the two fixed NULL
+      // keys (ord 100 and 101) land on different sides
+      val rng = new Random(seed * 17)
+      val (oldRows, deltaRows) = rows.partition(r => r.ord == 100 || (r.ord < 100 && rng.nextBoolean()))
+      val (old, delta) = (oldRows.map(_.key), deltaRows.map(_.key))
+      val oldCnt = old.groupBy(identity).map { case (k, ks) => k -> ks.size.toLong }
+      val want = (old ++ delta).groupBy(identity).toSeq.collect {
+        case (k, ks) if ks.size > oldCnt.getOrElse(k, 0L) && ks.size > 1 =>
+          (k, ks.size.toLong, oldCnt.getOrElse(k, 0L))
+      }.toSet
+      val got = CheckCompiler.incrementalDupGroups(old.toDF("clip_id"), delta.toDF("clip_id"), "clip_id")
+        .collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSet
+      assert(got == want, s"seed $seed")
+      assert(want.exists(_._1.isEmpty), s"seed $seed: no NULL-key group spans the append")
+
+      // a caller-supplied duplicated-key frame agrees with the compiler's own aggregate
+      val s = suite(refs)
+      val dupKeys = rows.groupBy(_.key).filter(_._2.size > 1).keys.toSeq.toDF("clip_id")
+      val own = verdictSet(CheckCompiler.verdicts(df, s))
+      assert(verdictSet(CheckCompiler.verdicts(df, s, dupKeys = Map("clip_id" -> dupKeys))) == own,
+        s"seed $seed")
+      assert(own == expected(rows, refList, (0L until Buckets.toLong).toSet)._1, s"seed $seed")
+    }
+  }
+
   test("a stopped-then-resumed scoped Runner run equals one fresh run and the recompute") {
     for (seed <- 5L to 6L) {
       val (rows, refList) = gen(seed)

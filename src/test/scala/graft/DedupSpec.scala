@@ -197,6 +197,36 @@ class DedupSpec extends AnyFunSuite {
     assert(labels == Map(5L -> 5L, 9L -> 5L, 7L -> 5L, 20L -> 20L, 21L -> 20L, 30L -> 30L))
   }
 
+  test("connectedComponents: each round's count job materializes its checkpoint") {
+    import spark.implicits._
+    // two disjoint 125-edge paths
+    val pairs = (0L until 125L).flatMap(i => Seq((i, i + 1), (1000L + i, 1001L + i))).toDF("id_a", "id_b")
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sc = spark.sparkContext
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.add(if (e.properties.getProperty("spark.jobGroup.id") == "after-cc") "marker"
+          else e.stageInfos.maxBy(_.stageId).name)
+    }
+    sc.addSparkListener(listener)
+    val labels = try {
+      val l = Dedup.connectedComponents(pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      sc.setJobGroup("after-cc", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!sites.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      l
+    } finally sc.removeSparkListener(listener)
+    assert(labels == ((0L to 125L).map(_ -> 0L) ++ (1000L to 1125L).map(_ -> 1000L)).toMap)
+    // the call's jobs, by the name of their final stage: a job of its own
+    // per checkpoint would end in a `localCheckpoint at Dedup.scala` stage
+    val jobs = sites.toArray.map(_.toString).filterNot(_ == "marker")
+    assert(jobs.nonEmpty)
+    val checkpointJobs = jobs.count(_.startsWith("localCheckpoint at"))
+    assert(checkpointJobs == 0, s"$checkpointJobs of ${jobs.length} jobs only materialize a checkpoint")
+  }
+
   test("cosine clusters are consistent components of the cosine pair graph") {
     val pairs = Ann.cosinePairs(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1)))

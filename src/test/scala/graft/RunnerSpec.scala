@@ -154,6 +154,64 @@ class RunnerSpec extends AnyFunSuite {
     }
   }
 
+  test("duplicate groups ride the checked rows: one file per bucket dir, no exchange in the write") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    import graft.dsl._
+    // key i % 13 over bucket i % 8: every duplicate group spans buckets;
+    // two NULL keys in different buckets; one row twice, so its row
+    // violation must be written twice
+    val rows = (0 until 40).map(i => (Option(f"c${i % 13}%03d"), i.toLong % 8, i.toLong)) ++
+      Seq((None, 2L, 40L), (None, 5L, 41L), (Some("c099"), 3L, 42L), (Some("c099"), 3L, 42L))
+    val df = rows.toDF("clip_id", "bucket", "ord")
+    val suite = CheckSuite("clip_id", "bucket", Seq(Unique("clip_id"),
+      RowExpr("ord_even", "ord", col("ord") % 2 === 0, col("ord").cast("string"))), Map.empty)
+    // a row check cannot pose as a group entry: check names key the rows
+    assertThrows[IllegalArgumentException](CheckSuite("clip_id", "bucket", Seq(Unique("clip_id"),
+      RowExpr("unique_clip_id", "clip_id", col("ord") > 0, col("ord").cast("string")))))
+    val out = Files.createTempDirectory("graft-runner-groups").toString
+    val writes = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (helper.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+          writes.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qeListener)
+    try {
+      Runner.run(spark, df, suite, out, totalBuckets = 8)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(qeListener)
+
+    val groups = rows.groupBy(_._1).filter(_._2.size > 1)
+    val want = (rows.collect { case (k, b, o) if o % 2 == 0 => Seq(k.orNull, "ord_even", "ord", o, b) } ++
+      groups.map { case (k, rs) => Seq(k.orNull, "unique_clip_id", "clip_id", rs.size, rs.map(_._2).min) })
+      .map(_.mkString("|")).sorted
+    val got = spark.read.schema(graft.compile.CheckCompiler.ViolationSchema).parquet(s"$out/violations")
+      .collect().map(_.mkString("|")).toSeq.sorted
+    assert(got == want)
+    val dirs = scala.util.Using.resource(Files.list(java.nio.file.Paths.get(out, "violations")))(
+      _.iterator().asScala.filter(Files.isDirectory(_)).toList)
+    assert(dirs.size == want.map(_.split('|').last).distinct.size)
+    dirs.foreach { d =>
+      val files = scala.util.Using.resource(Files.list(d))(
+        _.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")))
+      assert(files == 1, s"violations/${d.getFileName} holds $files parquet files")
+    }
+    // the group rows come from the cached rows, not a second duplicate aggregate
+    assert(writes.size == 1, s"${writes.size} write plans captured")
+    assert(helper.collect(writes.get(0)) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"violations write plan has an exchange:\n${writes.get(0)}")
+  }
+
   test("Runner.run leaves no cached frame behind, after success and after a failed write") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
